@@ -1008,10 +1008,12 @@ def _q_suite_overall_fold(spark, sf_dir):
     )
     store = LocalParquetCatalog(tempfile.mkdtemp(prefix="adspark_fold_"))
     suite = RuleSuite([Rule("uniqueness"), Rule("referential"), Rule("spans")])
-    res = suite.run(
-        spark, docs, cat, None, store=store, lineage_edges=edges, queries_per_table=qpt
-    )
-    docs.unpersist(blocking=False)
+    try:
+        res = suite.run(
+            spark, docs, cat, None, store=store, lineage_edges=edges, queries_per_table=qpt
+        )
+    finally:
+        docs.unpersist(blocking=False)
     overall = res.verdicts.filter(F.col("rule_id") == "overall")
     return overall.select(
         F.col("partition_id").cast("bigint").alias("partition_id"),
@@ -1044,8 +1046,10 @@ def _q_suite_doc_rule_counts(spark, sf_dir):
     cat = portable_asset_catalog(spark)
     store = LocalParquetCatalog(tempfile.mkdtemp(prefix="adspark_counts_"))
     suite = RuleSuite([Rule("uniqueness"), Rule("referential"), Rule("spans")])
-    res = suite.run(spark, docs, cat, None, store=store)
-    docs.unpersist(blocking=False)
+    try:
+        res = suite.run(spark, docs, cat, None, store=store)
+    finally:
+        docs.unpersist(blocking=False)
     keep = ["violations", "total_rows", "distinct_keys", "duplicate_keys", "duplicate_rows"]
     return (
         res.verdicts.select(
@@ -1100,10 +1104,12 @@ def _q_suite_verdicts_synthetic(spark, sf_dir):
     )
     store = LocalParquetCatalog(tempfile.mkdtemp(prefix="adspark_verdicts_"))
     suite = RuleSuite([Rule("uniqueness"), Rule("referential"), Rule("spans")])
-    res = suite.run(
-        spark, docs, cat, None, store=store, lineage_edges=edges, queries_per_table=qpt
-    )
-    docs.unpersist(blocking=False)
+    try:
+        res = suite.run(
+            spark, docs, cat, None, store=store, lineage_edges=edges, queries_per_table=qpt
+        )
+    finally:
+        docs.unpersist(blocking=False)
 
     def sorted_map(c):
         return F.map_from_entries(F.sort_array(F.map_entries(c)))

@@ -1144,7 +1144,8 @@ def duplicate_clusters(
                 )
         labels.unpersist(blocking=False)
         raise ValueError(
-            f"duplicate_clusters did not converge in {max_iters} iterations — "
+            f"duplicate_clusters did not converge in {max_iters} iterations "
+            f"({2 * max_iters} propagation hops) — "
             f"the pair graph has a diameter far beyond near-dup shape; raise "
             f"max_iters or use a star-contraction variant"
         )

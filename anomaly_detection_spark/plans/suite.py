@@ -13,9 +13,10 @@ resumes by anti-joining pending partitions against completed
 
 Crash consistency: for each rule, violations are written BEFORE the
 lineage rows that mark (rule, partition) complete; readers treat a
-violation row as authoritative only where a matching lineage row
-exists, so a crash between the two writes re-runs the rule and the
-orphaned violations are ignored (and deduplicated on read).
+violation row as authoritative only where the latest lineage row for
+its (rule, partition) carries the same run_id, so a crash between the
+two writes re-runs the rule and the orphaned violations are ignored
+(and deduplicated on read).
 """
 
 from __future__ import annotations
@@ -27,7 +28,7 @@ from dataclasses import dataclass, field
 from typing import Any
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 from anomaly_detection_spark.operators import verdict as V
 from anomaly_detection_spark.operators.profile import ProfileSpec, profile_long
@@ -36,7 +37,8 @@ from anomaly_detection_spark.operators.spans import (
     RULE_KIND,
     RULE_MONOTONE,
     RULE_PAYLOAD,
-    span_violations,
+    _per_rule_indexes,
+    any_span_violation,
 )
 from anomaly_detection_spark.sources.catalog import LocalParquetCatalog
 
@@ -67,11 +69,41 @@ SPAN_RULES = (RULE_MONOTONE, RULE_KIND, RULE_PAYLOAD)
 
 
 @dataclass(frozen=True)
+class RuleKind:
+    """One rule kind: the rule ids of its verdict rows, the run() inputs
+    it reads besides the documents, and the name of the RuleSuite
+    method that compiles it. A failed rule degrades every one of its
+    rule ids to Unknown."""
+
+    rule_ids: tuple[str, ...]
+    compiler: str
+    inputs: tuple[str, ...] = ()
+
+
+# The one rule-kind table: validation, resume bookkeeping, dispatch and
+# degrade all read it. Kinds that share a compiler (spans, uniqueness)
+# run as one group — one shared doc scan — when their pending partition
+# sets match, and through the same compiler one at a time otherwise.
+RULE_KINDS: dict[str, RuleKind] = {
+    "spans": RuleKind(SPAN_RULES, "_compile_docscan"),
+    "uniqueness": RuleKind((RULE_UNIQUE,), "_compile_docscan"),
+    "referential": RuleKind((RULE_RI,), "_compile_referential", ("asset_catalog",)),
+    "profile": RuleKind(("profile.doc_id", "profile.n_spans"), "_compile_profile"),
+    "completeness": RuleKind(("completeness.volume",), "_compile_completeness", ("commits",)),
+    "freshness": RuleKind(("freshness.commit",), "_compile_freshness", ("commits",)),
+    "event_freshness": RuleKind(
+        ("freshness.event",), "_compile_event_freshness", ("commits", "events")
+    ),
+    "drift": RuleKind((RULE_DRIFT,), "_compile_drift"),
+}
+
+
+@dataclass(frozen=True)
 class Rule:
-    """One declarative rule. ``kind`` ∈ {spans, uniqueness, referential,
-    profile, completeness, freshness}; ``params`` are kind-specific and
-    participate in the config hash (changing a param = a new run
-    lineage, matching the reference's config-driven re-evaluation)."""
+    """One declarative rule. ``kind`` is a key of ``RULE_KINDS``;
+    ``params`` are kind-specific and participate in the config hash
+    (changing a param = a new run lineage, matching the reference's
+    config-driven re-evaluation)."""
 
     kind: str
     params: dict[str, Any] = field(default_factory=dict)
@@ -89,11 +121,35 @@ class RunResult:
     skipped_pairs: int  # (rule, partition) pairs resumed from checkpoint
 
 
-class RuleSuite:
-    KNOWN_KINDS = (
-        "spans", "uniqueness", "referential", "profile",
-        "completeness", "freshness", "event_freshness", "drift",
+@dataclass
+class _Scope:
+    """What a compiler reads: the run's inputs pruned to one rule
+    group's pending partitions (``spine``), plus run-wide state."""
+
+    spark: SparkSession
+    spine: DataFrame
+    docs: DataFrame
+    commits: DataFrame | None
+    events: DataFrame | None
+    asset_catalog: DataFrame | None
+    store: LocalParquetCatalog
+    eval_ts: Column  # the suite's eval_time as a timestamp
+    cache: list[DataFrame]  # persisted intermediates, released when run() exits
+
+
+def _is_environment_error(e: Exception) -> bool:
+    """An import failure on the driver or in a Python worker: the
+    environment is broken, not the data, so degrading would hide it."""
+    from pyspark.errors import PythonException
+
+    return isinstance(e, ImportError) or (
+        isinstance(e, PythonException)
+        and any(name in str(e) for name in ("ModuleNotFoundError", "ImportError"))
     )
+
+
+class RuleSuite:
+    KNOWN_KINDS = tuple(RULE_KINDS)
 
     def __init__(
         self,
@@ -101,9 +157,8 @@ class RuleSuite:
         eval_time: str = "2025-08-16 00:00:00",
         parallel_rules: int = 8,
         max_violations_per_pair: int | None = 100_000,
-        fuse_doc_scan: bool | str = "auto",
     ):
-        unknown = [r.kind for r in rules if r.kind not in self.KNOWN_KINDS]
+        unknown = [r.kind for r in rules if r.kind not in RULE_KINDS]
         if unknown:
             raise ValueError(f"unknown rule kind(s) {unknown}; expected one of {self.KNOWN_KINDS}")
         self.rules = rules
@@ -121,20 +176,6 @@ class RuleSuite:
         # only the stored examples are deterministically down-sampled.
         # Operational knob — not part of the config hash.
         self.max_violations_per_pair = max_violations_per_pair
-        # execution strategy only (identical results, asserted in
-        # tests): run the span + uniqueness-violation rules from one
-        # shared spans pass when their pending partition sets line up.
-        # Measured on this host (16M docs, min-of-rounds): fused WINS at
-        # local[2] (172.3 vs 182.3s — cores are scarce, halving the
-        # spans BYTES READ dominates) and TIES at local[8] (60.9 vs
-        # 60.6s — idle-core overlap of independent rule jobs soaks the
-        # stalls the fused pass avoids). Default "auto" resolves at
-        # run(): fuse iff defaultParallelism <= 4 — i.e. exactly the
-        # regime where the measurement says bytes beat overlap. True/
-        # False force it either way (True for IO-bound deployments —
-        # cold object storage, saturated clusters — where total bytes,
-        # not overlap, bounds throughput at ANY core count).
-        self.fuse_doc_scan = fuse_doc_scan
 
     def config_hash(self) -> str:
         payload = json.dumps([r.canonical() for r in self.rules]) + self.eval_time
@@ -161,7 +202,8 @@ class RuleSuite:
             eval_time=d["eval_time"],
         )
 
-    # ---- rule compilers: each returns (verdicts_df, violations_df|None) ----
+    # ---- rule compilers: (scope, rules of one group) → one
+    # (verdicts_df, violations_df | None) per rule, in order ----
 
     def _span_verdicts(self, viol: DataFrame, partitions: DataFrame) -> DataFrame:
         counts = viol.groupBy("partition_id", "rule_id").agg(F.count(F.lit(1)).alias("n_viol"))
@@ -181,13 +223,9 @@ class RuleSuite:
             ).alias("metrics"),
         )
 
-    def _compile_spans(
-        self, docs: DataFrame, partitions: DataFrame, rule: Rule
-    ) -> tuple[DataFrame, DataFrame]:
-        viol = span_violations(docs, use_pandas_udf=rule.params.get("use_pandas_udf", False))
-        return self._span_verdicts(viol, partitions), viol
-
-    def _uniqueness_parts(self, docs: DataFrame, rule: Rule) -> tuple[DataFrame, DataFrame, str]:
+    def _uniqueness_parts(
+        self, docs: DataFrame, rule: Rule, cache: list[DataFrame]
+    ) -> tuple[DataFrame, DataFrame, str]:
         """(per_pk persisted, dk = dup-key set [broadcast-hinted when it
         fits], key). per_pk comes from a 2-column pruned scan with
         map-side partial agg — the skewed hot key reduces to one row per
@@ -196,14 +234,14 @@ class RuleSuite:
         per_pk = (
             docs.groupBy("partition_id", key).agg(F.count(F.lit(1)).alias("n")).persist()
         )
-        self._to_release.append(per_pk)
+        cache.append(per_pk)
         dup_keys = (
             per_pk.groupBy(key)
             .agg(F.sum("n").alias("dup_count"))
             .filter(F.col("dup_count") > 1)
             .persist()
         )
-        self._to_release.append(dup_keys)
+        cache.append(dup_keys)
         # COUNT-GUARDED broadcast: the dup-key set is data-dependent (at
         # 10^12 docs with the planted dup rate it is ~10^9 rows — an
         # unconditional F.broadcast would OOM the driver). The count is
@@ -251,36 +289,19 @@ class RuleSuite:
         )
         return verdicts
 
-    def _compile_uniqueness(
-        self, docs: DataFrame, partitions: DataFrame, rule: Rule
-    ) -> tuple[DataFrame, DataFrame]:
-        per_pk, dk, key = self._uniqueness_parts(docs, rule)
-        verdicts = self._uniqueness_verdicts(per_pk, dk, key, partitions)
-        viol = docs.join(dk.select(key), on=key, how="inner").select(
-            F.col(key).alias("doc_id"),
-            F.lit(RULE_UNIQUE).alias("rule_id"),
-            "partition_id",
-            F.col("spans").alias("offending_spans"),
-        )
-        return verdicts, viol
-
-    def _compile_referential(
-        self, docs: DataFrame, partitions: DataFrame, rule: Rule, catalog: DataFrame
-    ) -> tuple[DataFrame, DataFrame]:
+    def _compile_referential(self, s: _Scope, rules: list[Rule]) -> list[tuple[DataFrame, DataFrame]]:
+        (rule,) = rules
         viol = ri_violations(
-            docs,
-            catalog,
+            s.docs,
+            s.asset_catalog,
             broadcast_catalog=rule.params.get("broadcast_catalog", True),
             broadcast_threshold_rows=int(rule.params.get("broadcast_threshold_rows", 1_000_000)),
-            cache=self._to_release,
+            cache=s.cache,
         ).select(
             "doc_id", F.lit(RULE_RI).alias("rule_id"), "partition_id", "offending_spans"
         )
-        return self._ri_verdicts(viol, partitions), viol
-
-    def _ri_verdicts(self, viol: DataFrame, partitions: DataFrame) -> DataFrame:
         counts = viol.groupBy("partition_id").agg(F.count(F.lit(1)).alias("n_viol"))
-        return partitions.join(counts, on="partition_id", how="left").select(
+        verdicts = s.spine.join(counts, on="partition_id", how="left").select(
             "partition_id",
             F.lit(RULE_RI).alias("rule_id"),
             F.when(F.coalesce(F.col("n_viol"), F.lit(0)) > 0, F.lit(V.UNHEALTHY))
@@ -290,104 +311,95 @@ class RuleSuite:
                 "metrics"
             ),
         )
+        return [(verdicts, viol)]
 
-    def _compile_docscan_fused(
-        self,
-        docs: DataFrame,
-        partitions: DataFrame,
-        rules: dict[str, Rule],
-        catalog: DataFrame | None,
-    ) -> dict[str, tuple[DataFrame, DataFrame | None]]:
-        """ONE shared pass over the spans column for the span-invariant
-        and uniqueness-violation rules.
+    def _compile_docscan(self, s: _Scope, rules: list[Rule]) -> list[tuple[DataFrame, DataFrame]]:
+        """ONE pass over the spans column for the span-invariant and
+        uniqueness-violation rules, whichever of the two are in the
+        group.
 
-        Unfused, the spans column — the dominant bytes of the table — is
-        read separately by the span rule and by the uniqueness violation
-        join-back. Fused: the cheap pruned prerequisite still runs
-        (per-key counts on a 2-column scan), then a SINGLE spans-reading
-        pass — enriched with the count-guarded dup-key broadcast — gates
-        each doc (short-circuiting exists / dup flag) and materializes
-        both rules' offending span subsequences at once.
+        The spans column is the dominant bytes of the table. The cheap
+        pruned prerequisite still runs (per-key counts on a 2-column
+        scan), then a SINGLE spans-reading pass — enriched with the
+        count-guarded dup-key broadcast — gates each doc (short-
+        circuiting exists / dup flag) and materializes both rules'
+        offending span subsequences at once.
 
-        Referential integrity deliberately does NOT fuse: its membership
-        test against the data-dependent dangling-ref set is only cheap
-        as a broadcast hash JOIN on exploded refs; inlining it as an
-        array_contains against a collected ref array costs
+        Referential integrity deliberately does NOT join this scan: its
+        membership test against the data-dependent dangling-ref set is
+        only cheap as a broadcast hash JOIN on exploded refs; inlining
+        it as an array_contains against a collected ref array costs
         O(|dangling|) per span — quadratic in data size (measured 3-4x
-        slower at 1M docs) — so RI keeps its standalone two-phase plan.
-        Per-rule outputs (verdicts, violation slices) are identical to
-        the unfused compilers — checkpointing, resume, and the
-        correctness gate see no difference."""
-        from anomaly_detection_spark.operators.spans import (
-            _per_rule_indexes,
-            any_span_violation,
-        )
-
-        out: dict[str, tuple[DataFrame, DataFrame | None]] = {}
-        enriched = docs.select("doc_id", "partition_id", "spans")
+        slower at 1M docs) — so RI keeps its standalone two-phase plan."""
+        by_kind = {r.kind: r for r in rules}
+        cols = ["doc_id", "partition_id", "spans"]
         gates = []
-        per_pk = dk = key = None
-        if "uniqueness" in rules:
-            per_pk, dk, key = self._uniqueness_parts(docs, rules["uniqueness"])
+        branches = []
+        if "uniqueness" in by_kind:
+            per_pk, dk, key = self._uniqueness_parts(s.docs, by_kind["uniqueness"], s.cache)
+            if key not in cols:
+                cols.append(key)
+            gates.append(F.col("_dup").isNotNull())
+        enriched = s.docs.select(*cols)
+        if "uniqueness" in by_kind:
             enriched = enriched.join(
                 dk.select(F.col(key), F.lit(1).alias("_dup")), on=key, how="left"
             )
-            gates.append(F.col("_dup").isNotNull())
-        if "spans" in rules:
-            gates.append(any_span_violation("spans"))
-        gate = gates[0]
-        for g in gates[1:]:
-            gate = gate | g
-        flagged = enriched.filter(gate)
-
         # each branch carries an explicit `keep` flag: span rules keep a
         # row iff it has offending spans; the uniqueness rule keeps every
-        # duplicate-key doc even when its spans array is empty or null —
-        # matching the unfused violation join exactly (which writes
-        # whatever the doc's spans column holds)
-        branches = []
-        if "spans" in rules:
+        # duplicate-key doc even when its spans array is empty or null,
+        # and names it by its key (the rule's ``key`` param)
+        if "spans" in by_kind:
+            gates.append(any_span_violation("spans"))
             for rid in SPAN_RULES:
                 idxs = _per_rule_indexes(F.col("spans"), rid)
                 off = F.transform(idxs, lambda j: F.element_at(F.col("spans"), j + 1))
                 branches.append(
                     F.struct(
+                        F.col("doc_id"),
                         F.lit(rid).alias("rule_id"),
                         off.alias("offending_spans"),
                         (F.size(off) > 0).alias("keep"),
                     )
                 )
-        if "uniqueness" in rules:
+        if "uniqueness" in by_kind:
             branches.append(
                 F.struct(
+                    F.col(key).cast("string").alias("doc_id"),
                     F.lit(RULE_UNIQUE).alias("rule_id"),
                     F.col("spans").alias("offending_spans"),
                     F.col("_dup").isNotNull().alias("keep"),
                 )
             )
+        gate = gates[0]
+        for g in gates[1:]:
+            gate = gate | g
         viol_all = (
-            flagged.select("doc_id", "partition_id", F.explode(F.array(*branches)).alias("r"))
+            enriched.filter(gate)
+            .select("partition_id", F.explode(F.array(*branches)).alias("r"))
             .filter(F.col("r.keep"))
             .select(
-                "doc_id",
+                F.col("r.doc_id").alias("doc_id"),
                 "partition_id",
                 F.col("r.rule_id").alias("rule_id"),
                 F.col("r.offending_spans").alias("offending_spans"),
             )
             .persist()
         )
-        self._to_release.append(viol_all)
+        s.cache.append(viol_all)
         viol_all.count()  # materialize the single shared scan here
 
-        if "spans" in rules:
+        out = {}
+        if "spans" in by_kind:
             sv = viol_all.filter(F.col("rule_id").isin(list(SPAN_RULES)))
-            out["spans"] = (self._span_verdicts(sv, partitions), sv)
-        if "uniqueness" in rules:
+            out["spans"] = (self._span_verdicts(sv, s.spine), sv)
+        if "uniqueness" in by_kind:
             uv = viol_all.filter(F.col("rule_id") == RULE_UNIQUE)
-            out["uniqueness"] = (self._uniqueness_verdicts(per_pk, dk, key, partitions), uv)
-        return out
+            out["uniqueness"] = (self._uniqueness_verdicts(per_pk, dk, key, s.spine), uv)
+        return [out[r.kind] for r in rules]
 
-    def _compile_profile(self, docs: DataFrame, rule: Rule) -> tuple[DataFrame, None]:
+    def _compile_profile(self, s: _Scope, rules: list[Rule]) -> list[tuple[DataFrame, None]]:
+        (rule,) = rules
         null_rate_max = rule.params.get("null_rate_max")
         # size via the offset LEAF, not the struct: size(spans) forces the
         # scan to decode every span field including the dominant text
@@ -395,7 +407,7 @@ class RuleSuite:
         # int leaf (same value — field extraction preserves array length
         # and nullness). At 100 TB this is the difference between a
         # metadata-ish pass and a full-table decode.
-        flat = docs.select(
+        flat = s.docs.select(
             "partition_id",
             F.col("doc_id"),
             F.size("spans.offset").alias("n_spans"),
@@ -414,16 +426,9 @@ class RuleSuite:
             status.alias("status"),
             F.col("metrics"),
         )
-        return verdicts, None
+        return [(verdicts, None)]
 
-    def _compile_drift(
-        self,
-        spark: SparkSession,
-        docs: DataFrame,
-        partitions: DataFrame,
-        rule: Rule,
-        store: LocalParquetCatalog,
-    ) -> tuple[DataFrame, None]:
+    def _compile_drift(self, s: _Scope, rules: list[Rule]) -> list[tuple[DataFrame, None]]:
         """A12: distribution drift of a per-doc expression vs the PREVIOUS
         run's histogram for the same rule, read back from the lineage
         table (latest-row-per-group over past runs, any config hash —
@@ -432,6 +437,7 @@ class RuleSuite:
         the next run can compare against it. First run → Unknown."""
         from anomaly_detection_spark.operators.drift import histogram_sketch, psi_ks
 
+        (rule,) = rules
         # default reads only the offset leaf (same value as size(spans),
         # nested-prunes away the text payload — see _compile_profile)
         value_expr = rule.params.get("value_expr", "size(spans.offset)")
@@ -442,14 +448,14 @@ class RuleSuite:
         ks_threshold = float(rule.params.get("ks_threshold", 0.2))
 
         cur = histogram_sketch(
-            docs.select("partition_id", F.expr(value_expr).cast("double").alias("_v")),
+            s.docs.select("partition_id", F.expr(value_expr).cast("double").alias("_v")),
             "_v",
             lo,
             hi,
             n_buckets,
             by=["partition_id"],
         ).persist()
-        self._to_release.append(cur)
+        s.cache.append(cur)
 
         cur_json = (
             cur.groupBy("partition_id")
@@ -470,12 +476,11 @@ class RuleSuite:
         # months anyway.
         baseline_days = int(rule.params.get("baseline_lookback_days", 90))
         prev = None
-        if store.exists("_dq_lineage", spark):
-            eval_lit = F.to_timestamp(F.lit(self.eval_time))
-            lineage = store.read(spark, "_dq_lineage", LINEAGE_SCHEMA).filter(
+        if s.store.exists("_dq_lineage", s.spark):
+            lineage = s.store.read(s.spark, "_dq_lineage", LINEAGE_SCHEMA).filter(
                 (F.col("rule_id") == RULE_DRIFT)
-                & (F.col("evaluated_at") < eval_lit)
-                & (F.col("evaluated_at") >= F.date_sub(eval_lit, baseline_days))
+                & (F.col("evaluated_at") < s.eval_ts)
+                & (F.col("evaluated_at") >= F.date_sub(s.eval_ts, baseline_days))
                 & F.col("metrics").getItem("histogram").isNotNull()
             )
             latest = V.latest_per_group(lineage, ["partition_id"], "evaluated_at")
@@ -489,7 +494,7 @@ class RuleSuite:
                 prev = None
 
         if prev is None:
-            verdicts = partitions.join(cur_json, "partition_id", "left").select(
+            verdicts = s.spine.join(cur_json, "partition_id", "left").select(
                 "partition_id",
                 F.lit(RULE_DRIFT).alias("rule_id"),
                 F.lit(V.UNKNOWN).alias("status"),
@@ -498,11 +503,11 @@ class RuleSuite:
                     F.array(F.lit("NOT_ENOUGH_DATA"), F.coalesce(F.col("hist_json"), F.lit("{}"))),
                 ).alias("metrics"),
             )
-            return verdicts, None
+            return [(verdicts, None)]
 
         scored = psi_ks(prev, cur, by=["partition_id"], n_buckets=n_buckets)
         verdicts = (
-            partitions.join(scored, "partition_id", "left")
+            s.spine.join(scored, "partition_id", "left")
             .join(cur_json, "partition_id", "left")
             .select(
                 "partition_id",
@@ -524,107 +529,90 @@ class RuleSuite:
                 ).alias("metrics"),
             )
         )
-        return verdicts, None
+        return [(verdicts, None)]
 
-    def _compile_commit_rules(
-        self, commits: DataFrame, rule: Rule, partitions: DataFrame, events: DataFrame | None = None
-    ) -> tuple[DataFrame, None]:
-        eval_time = F.to_timestamp(F.lit(self.eval_time))
-        all_parts = partitions
-        if rule.kind == "event_freshness":
-            # M4/M5: event-latency freshness — the reference always runs
-            # the commit AND event paths together (freshness_utils.py:
-            # 661-752); the suite mirrors that with a dedicated rule kind.
-            from anomaly_detection_spark.operators.freshness import event_freshness_verdicts
+    def _commit_verdicts(
+        self, s: _Scope, rule: Rule, v: DataFrame, metrics: dict[str, str]
+    ) -> list[tuple[DataFrame, None]]:
+        """Project a commit-history operator's verdict frame to lineage
+        shape (``metrics`` maps metric names to its columns).
 
-            v = event_freshness_verdicts(
-                commits,
-                events,
-                eval_time,
-                latency_threshold_sec=rule.params.get("latency_threshold_sec"),
-                num_std=rule.params.get("num_std", 3.0),
-            )
-            verdicts = v.select(
-                "partition_id",
-                "rule_id",
-                "status",
-                F.map_from_arrays(
-                    F.array(
-                        F.lit("last_event"),
-                        F.lit("actual_latency_sec"),
-                        F.lit("predicted_upper_bound_latency_sec"),
-                    ),
-                    F.array(
-                        F.col("last_event").cast("string"),
-                        F.col("actual_latency_sec").cast("string"),
-                        F.col("predicted_upper_bound_latency_sec").cast("string"),
-                    ),
-                ).alias("metrics"),
-            )
-        elif rule.kind == "completeness":
-            from anomaly_detection_spark.operators.completeness import completeness_verdicts
-
-            v = completeness_verdicts(
-                commits,
-                eval_time,
-                threshold_override=rule.params.get("threshold_override"),
-                lookback_days=rule.params.get("lookback_days", 14),
-                num_std=rule.params.get("num_std", 3.0),
-            )
-            verdicts = v.select(
-                "partition_id",
-                "rule_id",
-                "status",
-                F.map_from_arrays(
-                    F.array(F.lit("last_window_row_volume"), F.lit("predicted_row_volume_lower_bound")),
-                    F.array(
-                        F.col("last_window_row_volume").cast("string"),
-                        F.col("predicted_row_volume_lower_bound").cast("string"),
-                    ),
-                ).alias("metrics"),
-            )
-        else:
-            from anomaly_detection_spark.operators.freshness import freshness_verdicts
-
-            v = freshness_verdicts(
-                commits,
-                eval_time,
-                constant_threshold_sec=rule.params.get("constant_threshold_sec"),
-                lookback_days=rule.params.get("lookback_days", 14),
-                num_std=rule.params.get("num_std", 3.0),
-            )
-            verdicts = v.select(
-                "partition_id",
-                "rule_id",
-                "status",
-                F.map_from_arrays(
-                    F.array(F.lit("last_data_update"), F.lit("upper_bound"), F.lit("staleness_age_seconds")),
-                    F.array(
-                        F.col("last_data_update").cast("string"),
-                        F.col("predicted_upper_bound_next_data_update").cast("string"),
-                        F.col("staleness_age_seconds").cast("string"),
-                    ),
-                ).alias("metrics"),
-            )
-        # Partitions with no usable history inside the window still get a
-        # verdict row (Unknown / NOT_ENOUGH_DATA — parity with reference
-        # completeness_utils.py:118: guard failures emit UNKNOWN, not
-        # silence) so they checkpoint and don't re-run forever.
-        rule_id = {
-            "completeness": "completeness.volume",
-            "freshness": "freshness.commit",
-            "event_freshness": "freshness.event",
-        }[rule.kind]
-        verdicts = all_parts.join(verdicts, on="partition_id", how="left").select(
+        Partitions with no usable history inside the window still get a
+        verdict row (Unknown / NOT_ENOUGH_DATA — parity with reference
+        completeness_utils.py:118: guard failures emit UNKNOWN, not
+        silence) so they checkpoint and don't re-run forever."""
+        verdicts = v.select(
             "partition_id",
-            F.coalesce(F.col("rule_id"), F.lit(rule_id)).alias("rule_id"),
+            "rule_id",
+            "status",
+            F.map_from_arrays(
+                F.array(*[F.lit(k) for k in metrics]),
+                F.array(*[F.col(c).cast("string") for c in metrics.values()]),
+            ).alias("metrics"),
+        )
+        verdicts = s.spine.join(verdicts, on="partition_id", how="left").select(
+            "partition_id",
+            F.coalesce(F.col("rule_id"), F.lit(RULE_KINDS[rule.kind].rule_ids[0])).alias("rule_id"),
             F.coalesce(F.col("status"), F.lit(V.UNKNOWN)).alias("status"),
             F.coalesce(
                 F.col("metrics"),
                 F.create_map(F.lit("error_code"), F.lit("NOT_ENOUGH_DATA")),
             ).alias("metrics"),
         )
-        return verdicts, None
+        return [(verdicts, None)]
+
+    def _compile_completeness(self, s: _Scope, rules: list[Rule]) -> list[tuple[DataFrame, None]]:
+        from anomaly_detection_spark.operators.completeness import completeness_verdicts
+
+        (rule,) = rules
+        v = completeness_verdicts(
+            s.commits,
+            s.eval_ts,
+            threshold_override=rule.params.get("threshold_override"),
+            lookback_days=rule.params.get("lookback_days", 14),
+            num_std=rule.params.get("num_std", 3.0),
+        )
+        names = ("last_window_row_volume", "predicted_row_volume_lower_bound")
+        return self._commit_verdicts(s, rule, v, {n: n for n in names})
+
+    def _compile_freshness(self, s: _Scope, rules: list[Rule]) -> list[tuple[DataFrame, None]]:
+        from anomaly_detection_spark.operators.freshness import freshness_verdicts
+
+        (rule,) = rules
+        v = freshness_verdicts(
+            s.commits,
+            s.eval_ts,
+            constant_threshold_sec=rule.params.get("constant_threshold_sec"),
+            lookback_days=rule.params.get("lookback_days", 14),
+            num_std=rule.params.get("num_std", 3.0),
+        )
+        return self._commit_verdicts(
+            s,
+            rule,
+            v,
+            {
+                "last_data_update": "last_data_update",
+                "upper_bound": "predicted_upper_bound_next_data_update",
+                "staleness_age_seconds": "staleness_age_seconds",
+            },
+        )
+
+    def _compile_event_freshness(self, s: _Scope, rules: list[Rule]) -> list[tuple[DataFrame, None]]:
+        # M4/M5: event-latency freshness — the reference always runs the
+        # commit AND event paths together (freshness_utils.py:661-752);
+        # the suite mirrors that with a dedicated rule kind.
+        from anomaly_detection_spark.operators.freshness import event_freshness_verdicts
+
+        (rule,) = rules
+        v = event_freshness_verdicts(
+            s.commits,
+            s.events,
+            s.eval_ts,
+            latency_threshold_sec=rule.params.get("latency_threshold_sec"),
+            num_std=rule.params.get("num_std", 3.0),
+        )
+        names = ("last_event", "actual_latency_sec", "predicted_upper_bound_latency_sec")
+        return self._commit_verdicts(s, rule, v, {n: n for n in names})
 
     # ---- runner ----
 
@@ -640,13 +628,18 @@ class RuleSuite:
         lineage_edges: DataFrame | None = None,
         queries_per_table: DataFrame | None = None,
     ) -> RunResult:
+        # input-contract errors are config bugs: reject them before any
+        # Spark job or store write
+        given = {"asset_catalog": asset_catalog, "commits": commits, "events": events}
+        for rule in self.rules:
+            for name in RULE_KINDS[rule.kind].inputs:
+                if given[name] is None:
+                    raise ValueError(f"rule kind '{rule.kind}' requires the {name} DataFrame")
+
         run_id = run_id or uuid.uuid4().hex[:12]
         cfg = self.config_hash()
         store = store or LocalParquetCatalog("/tmp/adspark_store")
-        # intermediate persisted DataFrames released at the end of the run
-        # (rule compilers cache re-used aggregates; leaking them across
-        # runs in one long-lived session accumulates executor memory)
-        self._to_release: list[DataFrame] = []
+        eval_ts = F.to_timestamp(F.lit(self.eval_time))
 
         # Checkpoint state is read ONCE per run and reduced driver-side:
         # it is tiny (one row per partition × rule), and doing the
@@ -663,7 +656,7 @@ class RuleSuite:
             completed_rows = (
                 store.read(spark, "_dq_lineage", LINEAGE_SCHEMA)
                 .filter(
-                    (F.col("evaluated_at") == F.to_timestamp(F.lit(self.eval_time)))
+                    (F.col("evaluated_at") == eval_ts)
                     & (F.col("config_hash") == cfg)
                     & F.col("error_message").isNull()
                 )
@@ -684,108 +677,66 @@ class RuleSuite:
         )
         commit_parts: list | None = None
 
-        eval_ts = F.to_timestamp(F.lit(self.eval_time))
-        new_verdicts: list[DataFrame] = []
+        def universe(kind: str) -> list:
+            """The partitions a rule kind judges: those of the commit
+            log for commit-history kinds, of the documents otherwise."""
+            nonlocal commit_parts
+            if "commits" not in RULE_KINDS[kind].inputs:
+                return all_parts
+            if commit_parts is None:
+                commit_parts = sorted(
+                    r.partition_id for r in commits.select("partition_id").distinct().collect()
+                )
+            return commit_parts
+
+        # Rules sharing a compiler and a pending partition set run as one
+        # group (one rule per kind): on a fresh run spans + uniqueness
+        # share one doc scan; a partial resume splits them.
         skipped_total = 0
-        pending_work: list[tuple[Rule, list]] = []
+        groups: list[tuple[list[Rule], list]] = []
         for rule in self.rules:
-            rule_ids = {
-                "spans": list(SPAN_RULES),
-                "uniqueness": [RULE_UNIQUE],
-                "referential": [RULE_RI],
-                "profile": ["profile.doc_id", "profile.n_spans"],
-                "completeness": ["completeness.volume"],
-                "freshness": ["freshness.commit"],
-                "event_freshness": ["freshness.event"],
-                "drift": [RULE_DRIFT],
-            }[rule.kind]
-
-            if rule.kind in ("completeness", "freshness", "event_freshness"):
-                if commits is None:
-                    raise ValueError(f"rule kind '{rule.kind}' requires a commits DataFrame")
-                if rule.kind == "event_freshness" and events is None:
-                    raise ValueError("rule kind 'event_freshness' requires an events DataFrame")
-                if commit_parts is None:
-                    commit_parts = sorted(
-                        r.partition_id for r in commits.select("partition_id").distinct().collect()
-                    )
-                universe = commit_parts
-            else:
-                universe = all_parts
-
+            kind = RULE_KINDS[rule.kind]
             # A partition is fully done for this rule iff ALL the rule's
             # rule_ids are checkpointed for it.
+            parts = universe(rule.kind)
             fully_done_parts = {
                 p
-                for p in universe
-                if all(p in completed_by_rule.get(rid, ()) for rid in rule_ids)
+                for p in parts
+                if all(p in completed_by_rule.get(rid, ()) for rid in kind.rule_ids)
             }
             skipped_total += len(fully_done_parts)
-            pending = [p for p in universe if p not in fully_done_parts]
+            pending = [p for p in parts if p not in fully_done_parts]
             if not pending:
                 continue
-            pending_work.append((rule, pending))
+            for group, group_pending in groups:
+                if (
+                    group_pending == pending
+                    and RULE_KINDS[group[0].kind].compiler == kind.compiler
+                    and all(r.kind != rule.kind for r in group)
+                ):
+                    group.append(rule)
+                    break
+            else:
+                groups.append(([rule], pending))
 
-        # Independent rules execute as CONCURRENT Spark jobs from a small
-        # driver pool (Spark job submission is thread-safe): each rule's
-        # scans/shuffles AND its store writes run fully in parallel —
-        # appends are concurrency-safe (one fresh subdirectory / Iceberg
-        # snapshot commit per append). Only the drift rule's read of the
-        # lineage table takes a lock, so its file listing isn't racing a
-        # concurrent append's directory creation. This replaces the
-        # reference's per-table driver thread pool
-        # (completeness_checker.py:153); correctness never depends on
-        # the pool — parallel_rules=1 is identical.
-        import threading
-        from concurrent.futures import ThreadPoolExecutor
+        # intermediate persisted DataFrames the compilers cache, released
+        # when the rules finish or fail (leaking them across runs in one
+        # long-lived session accumulates executor memory)
+        cache: list[DataFrame] = []
 
-        write_lock = threading.Lock()
-
-        import os
-        import time as _time
-
-        timing = os.environ.get("ADSPARK_TIMING") == "1"
-
-        def _pruned_docs(pending: list) -> DataFrame:
-            docs = documents
-            if len(pending) < len(all_parts):
+        def scope(group: list[Rule], pending: list) -> _Scope:
+            docs, com, ev = documents, commits, events
+            if len(pending) < len(universe(group[0].kind)):
                 # partition pruning: on a partition-keyed table this
                 # predicate prunes file groups at the scan
-                docs = docs.filter(F.col("partition_id").isin(pending))
-            return docs
+                keep = F.col("partition_id").isin(pending)
+                docs = docs.filter(keep)
+                com = com.filter(keep) if com is not None else None
+                ev = ev.filter(keep) if ev is not None else None
+            spine = spark.createDataFrame([(p,) for p in pending], "partition_id int")
+            return _Scope(spark, spine, docs, com, ev, asset_catalog, store, eval_ts, cache)
 
-        def execute(rule: Rule, pending: list) -> DataFrame:
-            _t0 = _time.time()
-            if rule.kind in ("completeness", "freshness", "event_freshness"):
-                src = commits
-                ev_src = events
-                if len(pending) < len(commit_parts or []):
-                    src = src.filter(F.col("partition_id").isin(pending))
-                    if ev_src is not None:
-                        ev_src = ev_src.filter(F.col("partition_id").isin(pending))
-                spine = spark.createDataFrame([(p,) for p in pending], "partition_id int")
-                verdicts, viol = self._compile_commit_rules(src, rule, spine, events=ev_src)
-            else:
-                docs = _pruned_docs(pending)
-                spine = spark.createDataFrame([(p,) for p in pending], "partition_id int")
-                if rule.kind == "spans":
-                    verdicts, viol = self._compile_spans(docs, spine, rule)
-                elif rule.kind == "uniqueness":
-                    verdicts, viol = self._compile_uniqueness(docs, spine, rule)
-                elif rule.kind == "referential":
-                    if asset_catalog is None:
-                        raise ValueError("rule kind 'referential' requires an asset_catalog DataFrame")
-                    verdicts, viol = self._compile_referential(docs, spine, rule, asset_catalog)
-                elif rule.kind == "profile":
-                    verdicts, viol = self._compile_profile(docs, rule)
-                elif rule.kind == "drift":
-                    with write_lock:  # drift reads the lineage table
-                        verdicts, viol = self._compile_drift(spark, docs, spine, rule, store)
-                else:
-                    raise ValueError(f"unknown rule kind: {rule.kind}")
-            return write_outputs(rule.kind, verdicts, viol, _t0)
-
-        def write_outputs(kind_label: str, verdicts: DataFrame, viol: DataFrame | None, _t0: float) -> DataFrame:
+        def write_outputs(verdicts: DataFrame, viol: DataFrame | None) -> None:
             lineage_rows = verdicts.select(
                 eval_ts.alias("evaluated_at"),
                 F.lit(run_id).alias("run_id"),
@@ -798,64 +749,61 @@ class RuleSuite:
                 F.lit(None).cast(IMPACT_STRUCT).alias("downstream_impact"),
                 F.lit(None).cast("map<string,map<string,string>>").alias("additional_debug_info"),
             )
-            # materialize the heavy plans OUTSIDE the write lock:
-            # violations feed both the write and the verdict counts, so
-            # one persist covers both; verdict rows are tiny
-            if viol is not None:
-                viol = viol.persist()
-            lineage_rows = lineage_rows.persist()
-            lineage_rows.count()
-            if timing:
-                print(f"[adspark] {kind_label} compute {_time.time()-_t0:.2f}s", flush=True)
-                _t0 = _time.time()
-            if viol is not None:
-                to_write = viol
-                cap = self.max_violations_per_pair
-                if cap is not None:
-                    # deterministic hash-threshold down-sampling per
-                    # (rule, partition): no window over a skewed key, no
-                    # hot reducer — a broadcast of per-pair counts plus a
-                    # row-local hash test
-                    counts = viol.groupBy("partition_id", "rule_id").agg(
-                        F.count(F.lit(1)).alias("_n")
-                    )
-                    to_write = viol.join(
-                        F.broadcast(counts), ["partition_id", "rule_id"]
-                    ).filter(
-                        (F.col("_n") <= cap)
-                        | (
-                            # hash includes the span payload: duplicate-key
-                            # violations share doc_id, and a doc_id-only
-                            # hash would keep all-or-none of a hot key.
-                            # NO run_id in the hash: the sample must be a
-                            # pure function of the data so identical runs
-                            # (e.g. at two cluster sizes) store identical
-                            # example sets — and retries stay idempotent.
-                            F.pmod(
-                                F.xxhash64("doc_id", "offending_spans"),
-                                F.lit(1_000_000),
-                            )
-                            < F.lit(1_000_000.0) * F.lit(float(cap)) / F.col("_n")
+            # materialize the heavy plans before the writes: violations
+            # feed both the write and the verdict counts, so one persist
+            # covers both (persisted FIRST, so the lineage plan reads the
+            # violations cache); verdict rows are tiny
+            persisted = [] if viol is None else [viol.persist()]
+            persisted.append(lineage_rows.persist())
+            try:
+                lineage_rows.count()
+                if viol is not None:
+                    to_write = viol
+                    cap = self.max_violations_per_pair
+                    if cap is not None:
+                        # deterministic hash-threshold down-sampling per
+                        # (rule, partition): no window over a skewed key,
+                        # no hot reducer — a broadcast of per-pair counts
+                        # plus a row-local hash test
+                        counts = viol.groupBy("partition_id", "rule_id").agg(
+                            F.count(F.lit(1)).alias("_n")
                         )
-                    ).drop("_n")
-                # repartition before write: violations are a tiny
-                # filtered set — the scan's task count would produce
-                # hundreds of near-empty files
-                store.append(
-                    "_dq_violations",
-                    to_write.withColumn("run_id", F.lit(run_id)).repartition(8),
-                )
-            store.append("_dq_lineage", lineage_rows.repartition(1))
-            if viol is not None:
-                viol.unpersist()
-            lineage_rows.unpersist()
-            if timing:
-                print(f"[adspark] {kind_label} writes {_time.time()-_t0:.2f}s", flush=True)
-            return lineage_rows
+                        to_write = viol.join(
+                            F.broadcast(counts), ["partition_id", "rule_id"]
+                        ).filter(
+                            (F.col("_n") <= cap)
+                            | (
+                                # hash includes the span payload: duplicate-
+                                # key violations share doc_id, and a doc_id-
+                                # only hash would keep all-or-none of a hot
+                                # key. NO run_id in the hash: the sample must
+                                # be a pure function of the data so identical
+                                # runs (e.g. at two cluster sizes) store
+                                # identical example sets — and retries stay
+                                # idempotent.
+                                F.pmod(
+                                    F.xxhash64("doc_id", "offending_spans"),
+                                    F.lit(1_000_000),
+                                )
+                                < F.lit(1_000_000.0) * F.lit(float(cap)) / F.col("_n")
+                            )
+                        ).drop("_n")
+                    # repartition before write: violations are a tiny
+                    # filtered set — the scan's task count would produce
+                    # hundreds of near-empty files
+                    store.append(
+                        "_dq_violations",
+                        to_write.withColumn("run_id", F.lit(run_id)).repartition(8),
+                    )
+                store.append("_dq_lineage", lineage_rows.repartition(1))
+            finally:
+                for df in persisted:
+                    df.unpersist()
 
-        def degrade(rule: Rule, pending: list, e: Exception) -> DataFrame:
+        def degrade(group: list[Rule], pending: list, e: Exception) -> None:
             """M16: write Unknown verdicts with an error code + clipped
-            message for a failed rule's pending partitions."""
+            message for every rule id of a failed group's pending
+            partitions."""
             from anomaly_detection_spark.functions.errors import (
                 clip_error_message,
                 match_error_message_to_code,
@@ -863,127 +811,61 @@ class RuleSuite:
 
             code = match_error_message_to_code(str(e)).value
             msg = clip_error_message(str(e))
-            rid = {
-                "spans": RULE_MONOTONE,
-                "uniqueness": RULE_UNIQUE,
-                "referential": RULE_RI,
-                "profile": "profile.doc_id",
-                "completeness": "completeness.volume",
-                "freshness": "freshness.commit",
-                "event_freshness": "freshness.event",
-                "drift": RULE_DRIFT,
-            }[rule.kind]
             rows = spark.createDataFrame(
                 [
                     (None, run_id, cfg, int(p), rid, V.UNKNOWN, {"error_code": code}, msg, None, None)
+                    for rule in group
+                    for rid in RULE_KINDS[rule.kind].rule_ids
                     for p in pending
                 ],
                 LINEAGE_SCHEMA,
             ).withColumn("evaluated_at", eval_ts)
-            rows = rows.select(
-                "evaluated_at", "run_id", "config_hash", "partition_id",
-                "rule_id", "status", "metrics", "error_message",
-                "downstream_impact", "additional_debug_info",
-            )
             store.append("_dq_lineage", rows.repartition(1))
-            return rows
 
-        def execute_safe(rule: Rule, pending: list) -> DataFrame:
+        def execute_safe(group: list[Rule], pending: list) -> None:
             """Reference parity (M16, completeness_checker.py:123-135):
-            a rule failure degrades to Unknown verdicts with an error
-            code + clipped message for its pending partitions — the run
-            and the other rules proceed. Input-contract errors (missing
-            commits/catalog) still raise: they are config bugs."""
+            a failure degrades every rule of its group to Unknown
+            verdicts with an error code + clipped message for its
+            pending partitions — the run and the other groups proceed,
+            and the next run retries them. Config errors (ValueError)
+            and environment errors (failed imports) raise instead."""
             try:
-                return execute(rule, pending)
+                outs = getattr(self, RULE_KINDS[group[0].kind].compiler)(
+                    scope(group, pending), group
+                )
+                for verdicts, viol in outs:
+                    write_outputs(verdicts, viol)
             except ValueError:
                 raise
             except Exception as e:  # noqa: BLE001 — by design
-                return degrade(rule, pending, e)
+                if _is_environment_error(e):
+                    raise
+                degrade(group, pending, e)
 
-        def execute_fused_safe(frules: list[Rule], pending: list) -> DataFrame:
-            """One shared spans pass for the doc-scanning violation
-            rules; per-rule outputs written exactly as the unfused path
-            would. A failure degrades ALL fused rules (M16) — the run
-            retries them (unfused or fused) next time."""
-            try:
-                _t0 = _time.time()
-                docs = _pruned_docs(pending)
-                spine = spark.createDataFrame([(p,) for p in pending], "partition_id int")
-                outs = self._compile_docscan_fused(
-                    docs, spine, {r.kind: r for r in frules}, asset_catalog
-                )
-                if timing:
-                    print(f"[adspark] fused({','.join(sorted(outs))}) scan {_time.time()-_t0:.2f}s", flush=True)
-                last = None
-                for r in frules:
-                    verdicts, viol = outs[r.kind]
-                    last = write_outputs(r.kind, verdicts, viol, _time.time())
-                return last
-            except ValueError:
-                raise
-            except Exception as e:  # noqa: BLE001 — by design
-                last = None
-                for r in frules:
-                    last = degrade(r, pending, e)
-                return last
+        # Independent rule groups execute as CONCURRENT Spark jobs from a
+        # small driver pool (Spark job submission is thread-safe): each
+        # group's scans/shuffles AND its store writes run fully in
+        # parallel — appends are concurrency-safe (one fresh
+        # subdirectory / Iceberg snapshot commit per append). This
+        # replaces the reference's per-table driver thread pool
+        # (completeness_checker.py:153); correctness never depends on
+        # the pool — parallel_rules=1 is identical.
+        from concurrent.futures import ThreadPoolExecutor
 
-        if pending_work:
-            # Fuse the doc-scanning violation rules into one shared scan
-            # when their pending partition sets line up (the common
-            # fresh-run case); partial resumes fall back to per-rule
-            # plans, which are correctness-identical.
-            fusable = [
-                (r, p)
-                for (r, p) in pending_work
-                if r.kind in ("spans", "uniqueness")
-            ]
-            fuse = self.fuse_doc_scan
-            if fuse == "auto":
-                # bytes-vs-overlap tradeoff (see __init__): fuse when
-                # cores are scarce, overlap when they're plentiful
-                fuse = spark.sparkContext.defaultParallelism <= 4
-            fuse_ok = (
-                fuse
-                and len(fusable) >= 2
-                and len({tuple(p) for _, p in fusable}) == 1
-                and all(
-                    not r.params.get("use_pandas_udf", False)
-                    for r, _ in fusable
-                    if r.kind == "spans"
-                )
-                and all(
-                    r.params.get("key", "doc_id") == "doc_id"
-                    for r, _ in fusable
-                    if r.kind == "uniqueness"
-                )
-            )
-            tasks = []
-            if fuse_ok:
-                frules = [r for r, _ in fusable]
-                fpending = fusable[0][1]
-                fused_ids = {id(r) for r in frules}
-                tasks.append(lambda: execute_fused_safe(frules, fpending))
-                rest = [(r, p) for (r, p) in pending_work if id(r) not in fused_ids]
-            else:
-                rest = pending_work
-            tasks.extend(
-                (lambda r=r, p=p: execute_safe(r, p)) for r, p in rest
-            )
-            workers = min(self.parallel_rules, len(tasks))
+        try:
+            workers = min(self.parallel_rules, len(groups))
             if workers <= 1:
-                new_verdicts = [t() for t in tasks]
+                for group, pending in groups:
+                    execute_safe(group, pending)
             else:
                 with ThreadPoolExecutor(max_workers=workers) as pool:
-                    new_verdicts = list(pool.map(lambda t: t(), tasks))
-
-        for df in self._to_release:
-            df.unpersist()
-        self._to_release = []
+                    list(pool.map(lambda gp: execute_safe(*gp), groups))
+        finally:
+            for df in cache:
+                df.unpersist()
 
         lineage_all = store.read(spark, "_dq_lineage", LINEAGE_SCHEMA).filter(
-            (F.col("evaluated_at") == F.to_timestamp(F.lit(self.eval_time)))
-            & (F.col("config_hash") == cfg)
+            (F.col("evaluated_at") == eval_ts) & (F.col("config_hash") == cfg)
         )
         # latest verdict per (partition, rule); on evaluated_at ties a
         # healed (non-error) verdict beats a retryable error row
@@ -1054,21 +936,22 @@ class RuleSuite:
         # short-circuit: when work ran this run we append regardless, so
         # only the nothing-pending resume path pays the stored-overall
         # existence probe (an eager isEmpty job)
-        if pending_work or lineage_all.filter(F.col("rule_id") == RULE_OVERALL).isEmpty():
+        if groups or lineage_all.filter(F.col("rule_id") == RULE_OVERALL).isEmpty():
             store.append("_dq_lineage", overall_rows.repartition(1))
-        lineage_all = lineage_rules.unionByName(overall_rows)
 
-        latest = latest_of(lineage_all)
+        latest = latest_of(lineage_rules.unionByName(overall_rows))
         # impact desc participates in the display sort (reference
         # common_utils.py:35-91); only overall rows carry impact — the
         # null-to-lowest rule keeps per-rule rows stably ordered
         verdicts_sorted = V.sort_verdicts(latest, impact_col="downstream_impact.impact_level")
         violations = store.read(spark, "_dq_violations", VIOLATIONS_SCHEMA)
-        # authoritative violations: only where a lineage row marks the
-        # (rule, partition) complete, deduped per doc/rule
+        # authoritative violations: only those written by the run whose
+        # verdict is the latest for their (rule, partition) — never an
+        # older eval_time's or config's, nor a crashed attempt's —
+        # deduped per doc/rule
         violations = violations.join(
-            lineage_all.select("partition_id", "rule_id").distinct(),
-            on=["partition_id", "rule_id"],
+            latest_rules.select("partition_id", "rule_id", "run_id"),
+            on=["partition_id", "rule_id", "run_id"],
             how="left_semi",
         ).dropDuplicates(["doc_id", "rule_id", "partition_id"])
         return RunResult(run_id, cfg, verdicts_sorted, violations, skipped_total)

@@ -36,11 +36,6 @@ def main(argv: list[str] | None = None) -> int:
         "--rules",
         default="profile,uniqueness,referential,spans,completeness,freshness,event_freshness,drift",
     )
-    p.add_argument(
-        "--fuse-doc-scan",
-        action="store_true",
-        help="one shared spans pass for span+uniqueness violations (IO-bound deployments)",
-    )
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -80,7 +75,7 @@ def main(argv: list[str] | None = None) -> int:
     rules = [Rule(k.strip()) for k in args.rules.split(",") if k.strip()]
     if events is None:
         rules = [r for r in rules if r.kind != "event_freshness"]
-    suite = RuleSuite(rules, eval_time=args.eval_time, fuse_doc_scan=args.fuse_doc_scan)
+    suite = RuleSuite(rules, eval_time=args.eval_time)
     store = LocalParquetCatalog(args.store)
 
     t0 = time.time()

@@ -28,11 +28,15 @@ def main() -> None:
     if args and args[0] == "-r":
         repeats = int(args[1])
         args = args[2:]
+    qs = entrymod.all_queries()
+    unknown = [n for n in args if n not in qs]
+    if unknown or not args:
+        sys.exit(f"unknown queries {unknown}; choose from {sorted(qs)}" if unknown else __doc__)
+    args = list(dict.fromkeys(args))  # each query once, in the order given
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     spark = get_spark(app_name="adspark-bench-extra", master=f"local[{cpus}]", shuffle_partitions=2 * cpus)
     spark.range(1000).selectExpr("sum(id)").collect()
-    qs = entrymod.all_queries()
     timings: dict[str, list[float]] = {n: [] for n in args}
     for _ in range(repeats):
         for name in args:

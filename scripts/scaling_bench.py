@@ -27,7 +27,7 @@ import tempfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 RUNNER = r"""
-import json, os, sys, tempfile, time
+import json, sys, tempfile, time
 sys.path.insert(0, {repo!r})
 from anomaly_detection_spark.session import get_spark
 from anomaly_detection_spark.plans.suite import default_suite
@@ -50,11 +50,6 @@ qpt = queries_per_table(spark)
 def run_once(docs_dir):
     docs = spark.read.parquet(docs_dir)
     suite = default_suite()
-    # pin the scan strategy IDENTICALLY on both legs: the engine's
-    # "auto" default fuses at <=4 cores, which would make the N-leg run
-    # a different (faster) plan than the 4N-leg and contaminate the
-    # scaling-efficiency ratio. SCALE_FUSED=1 measures fused-everywhere.
-    suite.fuse_doc_scan = os.environ.get("SCALE_FUSED") == "1"
     store = LocalParquetCatalog(tempfile.mkdtemp(prefix=f"adspark_scale{{cores}}_"))
     t0 = time.time()
     res = suite.run(spark, docs, cat, commits, store=store,

@@ -70,10 +70,6 @@ def run_suite(cores: int, docs_dir: str, rule_kind: str | None, evdir: str) -> f
         if rule_kind
         else default_suite()
     )
-    # Pin the same scan strategy as the scaling_bench legs (the 'auto'
-    # default would fuse at <=4 cores and change the plan mid-table):
-    # SCALE_FUSED=1 measures fused-everywhere, default unfused.
-    suite.fuse_doc_scan = os.environ.get("SCALE_FUSED") == "1"
     store = LocalParquetCatalog(tempfile.mkdtemp(prefix=f"occ{cores}_"))
     t0 = time.time()
     res = suite.run(

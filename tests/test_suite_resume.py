@@ -160,37 +160,39 @@ def test_suite_json_roundtrip(spark):
 
 def test_rule_failure_degrades_to_unknown_and_retries(spark, inputs, tmp_path, monkeypatch):
     """M16 parity: a crashing rule yields Unknown verdicts with an error
-    code instead of failing the run; errored pairs are retried on the
-    next run (error rows don't checkpoint)."""
+    code instead of failing the run; the other rules are unaffected, and
+    errored pairs are retried on the next run (error rows don't
+    checkpoint)."""
     docs, cat, commits, _events = inputs
     store = LocalParquetCatalog(str(tmp_path / "store"))
-    # fuse_doc_scan=False: per-rule failure isolation is an unfused
-    # property (a fused-scan failure degrades all fused rules together —
-    # covered by test_fused_docscan_matches_unfused)
-    suite = RuleSuite([Rule("spans"), Rule("uniqueness")], parallel_rules=1, fuse_doc_scan=False)
+    suite = RuleSuite([Rule("spans"), Rule("uniqueness"), Rule("referential")], parallel_rules=1)
 
     boom = RuntimeError("model failed to converge")
-    orig = RuleSuite._compile_uniqueness
+    orig = RuleSuite._compile_referential
     monkeypatch.setattr(
-        RuleSuite, "_compile_uniqueness", lambda self, *a, **k: (_ for _ in ()).throw(boom)
+        RuleSuite, "_compile_referential", lambda self, *a, **k: (_ for _ in ()).throw(boom)
     )
     r1 = suite.run(spark, docs, cat, commits, store=store)
     by_rule = {}
     for row in r1.verdicts.collect():
         by_rule.setdefault(row["rule_id"], []).append(row)
-    uniq = by_rule["unique.doc_id"]
-    assert all(v["status"] == "Unknown" for v in uniq)
-    assert all(v["metrics"]["error_code"] == "MODEL_FIT_FAILED" for v in uniq)
-    assert all("converge" in v["error_message"] for v in uniq)
-    # spans still ran normally
-    assert any(v["status"] != "Unknown" for v in by_rule["spans.monotone_offset"])
+    ri = by_rule["ri.media_ref"]
+    assert len(ri) == 4
+    assert all(v["status"] == "Unknown" for v in ri)
+    assert all(v["metrics"]["error_code"] == "MODEL_FIT_FAILED" for v in ri)
+    assert all("converge" in v["error_message"] for v in ri)
+    # the doc-scan rules still ran normally
+    for rid in ("spans.monotone_offset", "unique.doc_id"):
+        assert all(v["status"] in ("Healthy", "Unhealthy") for v in by_rule[rid])
 
-    # restore and rerun: uniqueness retries (spans skipped), verdicts heal
-    monkeypatch.setattr(RuleSuite, "_compile_uniqueness", orig)
+    # restore and rerun: referential retries (doc-scan rules skipped),
+    # verdicts heal
+    monkeypatch.setattr(RuleSuite, "_compile_referential", orig)
     r2 = suite.run(spark, docs, cat, commits, store=store)
-    uniq2 = [v for v in r2.verdicts.collect() if v["rule_id"] == "unique.doc_id"]
-    assert all(v["status"] in ("Healthy", "Unhealthy") for v in uniq2)
-    assert r2.skipped_pairs > 0  # spans pairs were checkpointed
+    ri2 = [v for v in r2.verdicts.collect() if v["rule_id"] == "ri.media_ref"]
+    assert len(ri2) == 4
+    assert all(v["status"] in ("Healthy", "Unhealthy") for v in ri2)
+    assert r2.skipped_pairs == 8  # spans + uniqueness pairs were checkpointed
 
 
 def test_violation_cap_downsamples_but_keeps_exact_metrics(spark, tmp_path):
@@ -251,64 +253,116 @@ def test_overall_fold_row_with_impact_and_debug(spark, inputs, tmp_path):
     assert v1 == v2
 
 
-def test_fused_docscan_matches_unfused(spark, inputs, tmp_path):
-    """The fused shared-scan path must be output-identical to the
-    per-rule plans: same verdicts (status + metrics) and same violation
-    rows; and a failure inside the fused scan degrades ALL fused rules
-    to Unknown with an error code."""
-    docs, cat, commits, _events = inputs
-    rules = [Rule("spans"), Rule("uniqueness"), Rule("referential")]
+def _kernel_expectations(docs):
+    """Per-(partition, rule) verdicts and violation triplets of the
+    span and uniqueness rules, straight from the operator kernels:
+    ``span_violations`` and ``duplicate_keys`` joined back to the docs."""
+    from anomaly_detection_spark.operators.spans import span_violations
+    from anomaly_detection_spark.operators.uniqueness import duplicate_keys
 
-    def run(fused: bool, store_dir: str):
-        suite = RuleSuite(list(rules), fuse_doc_scan=fused)
+    span_rules = ("spans.monotone_offset", "spans.valid_kind", "spans.payload_presence")
+    sv = {(x["doc_id"], x["rule_id"], x["partition_id"]) for x in span_violations(docs).collect()}
+    dup = {x["doc_id"] for x in duplicate_keys(docs, "doc_id").collect()}
+    rows = [(x["doc_id"], x["partition_id"]) for x in docs.select("doc_id", "partition_id").collect()]
+    uv = {(d, "unique.doc_id", p) for d, p in rows if d in dup}
+
+    def status(n):
+        return "Unhealthy" if n > 0 else "Healthy"
+
+    verdicts = {}
+    for p in {p for _, p in rows}:
+        for rid in span_rules:
+            n = sum(1 for _, r, q in sv if (r, q) == (rid, p))
+            verdicts[(p, rid)] = (status(n), {"violations": str(n)})
+        keys = [d for d, q in rows if q == p]
+        dup_keys = {d for d in keys if d in dup}
+        verdicts[(p, "unique.doc_id")] = (
+            status(len(dup_keys)),
+            {
+                "total_rows": str(len(keys)),
+                "distinct_keys": str(len(set(keys))),
+                "duplicate_keys": str(len(dup_keys)),
+                "duplicate_rows": str(sum(1 for d in keys if d in dup)),
+            },
+        )
+    return verdicts, sv, uv
+
+
+def _suite_outputs(res):
+    verdicts = {
+        (x["partition_id"], x["rule_id"]): (x["status"], dict(x["metrics"]))
+        for x in res.verdicts.collect()
+        if x["rule_id"] != "overall"
+    }
+    viol = {(x["doc_id"], x["rule_id"], x["partition_id"]) for x in res.violations.collect()}
+    return verdicts, viol
+
+
+def test_docscan_matches_operator_kernels(spark, inputs, tmp_path):
+    """The doc-scan compiler gives the operator kernels' verdicts and
+    violation triplets whether spans and uniqueness run as one group,
+    alone, or split because a resume left their pending partition sets
+    different."""
+    docs, cat, commits, _events = inputs
+    want_v, want_sv, want_uv = _kernel_expectations(docs)
+    assert want_sv and want_uv
+
+    def run(kinds, store_dir, resume=None):
         store = LocalParquetCatalog(str(tmp_path / store_dir))
+        suite = RuleSuite([Rule(k) for k in kinds])
+        if resume is not None:
+            # a crashed run of the same config that finished the span
+            # rules for partitions 0 and 1 only
+            crashed = RuleSuite([Rule("spans")], eval_time=suite.eval_time)
+            crashed.config_hash = suite.config_hash
+            crashed.run(spark, docs.filter(F.col("partition_id") < 2), store=store)
         return suite.run(spark, docs, cat, commits, store=store)
 
-    rf = run(True, "fused")
-    ru = run(False, "unfused")
-    vf = sorted(
-        (x["partition_id"], x["rule_id"], x["status"], tuple(sorted(x["metrics"].items())))
-        for x in rf.verdicts.collect()
+    def subset(verdicts, rule_ids):
+        return {k: v for k, v in verdicts.items() if k[1] in rule_ids}
+
+    span_ids = {"spans.monotone_offset", "spans.valid_kind", "spans.payload_presence"}
+    got_v, got_viol = _suite_outputs(run(["spans", "uniqueness"], "paired"))
+    assert got_v == want_v
+    assert got_viol == want_sv | want_uv
+
+    resumed = run(["spans", "uniqueness"], "split", resume=True)
+    assert resumed.skipped_pairs == 2
+    assert _suite_outputs(resumed) == (want_v, want_sv | want_uv)
+
+    got_v, got_viol = _suite_outputs(run(["spans"], "spans_only"))
+    assert got_v == subset(want_v, span_ids)
+    assert got_viol == want_sv
+
+    got_v, got_viol = _suite_outputs(run(["uniqueness"], "uniqueness_only"))
+    assert got_v == subset(want_v, {"unique.doc_id"})
+    assert got_viol == want_uv
+
+
+def test_docscan_failure_degrades_every_rule_id(spark, inputs, tmp_path, monkeypatch):
+    """A failure inside the doc scan degrades every rule id of every
+    rule in its group (all three span ids and uniqueness) to Unknown
+    with an error code; the other rules are unaffected and the overall
+    fold counts every rule id."""
+    docs, cat, commits, _events = inputs
+    monkeypatch.setattr(
+        RuleSuite,
+        "_compile_docscan",
+        lambda self, *a, **k: (_ for _ in ()).throw(RuntimeError("model failed to converge")),
     )
-    vu = sorted(
-        (x["partition_id"], x["rule_id"], x["status"], tuple(sorted(x["metrics"].items())))
-        for x in ru.verdicts.collect()
-    )
-    assert vf == vu
-
-    # the violations read-back dedups on (doc_id, rule_id, partition) —
-    # for duplicated keys the surviving representative's span payload is
-    # an arbitrary pick, so compare the deterministic identity triplets
-    def viol_set(r):
-        return {
-            (x["doc_id"], x["rule_id"], x["partition_id"]) for x in r.violations.collect()
-        }
-
-    assert viol_set(rf) == viol_set(ru)
-    assert len(viol_set(rf)) > 0
-
-    # fused failure degrades every fused rule (M16, all-or-nothing)
-    suite = RuleSuite(list(rules), fuse_doc_scan=True)
-    orig = RuleSuite._compile_docscan_fused
-    try:
-        RuleSuite._compile_docscan_fused = lambda self, *a, **k: (_ for _ in ()).throw(
-            RuntimeError("model failed to converge")
-        )
-        rboom = suite.run(
-            spark, docs, cat, commits, store=LocalParquetCatalog(str(tmp_path / "boom"))
-        )
-    finally:
-        RuleSuite._compile_docscan_fused = orig
+    suite = RuleSuite([Rule("spans"), Rule("uniqueness"), Rule("profile")])
+    r = suite.run(spark, docs, cat, commits, store=LocalParquetCatalog(str(tmp_path / "boom")))
     by_rule = {}
-    for v in rboom.verdicts.collect():
-        if v["rule_id"] != "overall":
-            by_rule.setdefault(v["rule_id"], []).append(v)
-    for rid in ("spans.monotone_offset", "unique.doc_id"):
+    for v in r.verdicts.collect():
+        by_rule.setdefault(v["rule_id"], []).append(v)
+    for rid in ("spans.monotone_offset", "spans.valid_kind", "spans.payload_presence", "unique.doc_id"):
+        assert len(by_rule[rid]) == 4, rid
         assert all(v["status"] == "Unknown" for v in by_rule[rid])
         assert all(v["metrics"]["error_code"] == "MODEL_FIT_FAILED" for v in by_rule[rid])
-    # referential does not fuse (its membership test is only cheap as a
-    # join) → unaffected by the fused-scan failure
-    assert all(v["status"] in ("Healthy", "Unhealthy") for v in by_rule["ri.media_ref"])
+    for rid in ("profile.doc_id", "profile.n_spans"):
+        assert all(v["status"] == "Healthy" for v in by_rule[rid])
+    assert all(v["metrics"]["rules_evaluated"] == "6" for v in by_rule["overall"])
+    assert r.violations.count() == 0
 
 
 def test_stale_overall_row_never_wins_resume(spark, inputs, tmp_path):
@@ -356,10 +410,10 @@ def test_stale_overall_row_never_wins_resume(spark, inputs, tmp_path):
     assert all(v["metrics"]["rules_evaluated"] == "4" for v in overall.values())
 
 
-def test_fused_uniqueness_keeps_empty_span_dup_rows(spark, tmp_path):
+def test_docscan_uniqueness_keeps_empty_span_dup_rows(spark, tmp_path):
     """A duplicate-key doc whose spans array is empty or null must yield
-    a uniqueness violation row in BOTH the fused and unfused paths (the
-    fused path previously filtered them out via size(spans) > 0)."""
+    a uniqueness violation row, as the operator kernels give, whether
+    the uniqueness rule runs alone or grouped with the span rules."""
     from tests.conftest import make_docs
 
     rows = [
@@ -370,24 +424,113 @@ def test_fused_uniqueness_keeps_empty_span_dup_rows(spark, tmp_path):
         ("solo", 0, [("text", "ok", None, 0)]),
     ]
     docs = make_docs(spark, rows)
-
-    def viol_set(fused: bool, store_dir: str):
-        suite = RuleSuite([Rule("spans"), Rule("uniqueness")], fuse_doc_scan=fused)
-        r = suite.run(spark, docs, store=LocalParquetCatalog(str(tmp_path / store_dir)))
-        return {
-            (x["doc_id"], x["rule_id"], x["partition_id"]) for x in r.violations.collect()
-        }
-
-    vf = viol_set(True, "fused")
-    vu = viol_set(False, "unfused")
-    assert vf == vu
-    expected = {
+    _want_v, want_sv, want_uv = _kernel_expectations(docs)
+    assert want_uv == {
         ("dup", "unique.doc_id", 0),
         ("dup", "unique.doc_id", 1),
         ("dupnull", "unique.doc_id", 0),
         ("dupnull", "unique.doc_id", 1),
     }
-    assert expected <= vf
+
+    def viol_set(kinds, store_dir: str):
+        suite = RuleSuite([Rule(k) for k in kinds])
+        r = suite.run(spark, docs, store=LocalParquetCatalog(str(tmp_path / store_dir)))
+        return {
+            (x["doc_id"], x["rule_id"], x["partition_id"]) for x in r.violations.collect()
+        }
+
+    assert viol_set(["spans", "uniqueness"], "paired") == want_sv | want_uv
+    assert viol_set(["uniqueness"], "uniqueness_only") == want_uv
+    assert viol_set(["spans"], "spans_only") == want_sv
+
+
+def test_uniqueness_key_param_names_rows_by_key(spark, tmp_path):
+    """The uniqueness ``key`` param: duplicates are judged on that
+    column and each violation row carries the key as its doc_id."""
+    from tests.conftest import make_docs
+
+    ok = [("text", "ok", None, 0)]
+    docs = make_docs(spark, [("a", 0, ok), ("b", 0, ok), ("c", 1, ok)]).withColumn(
+        "src", F.when(F.col("doc_id") == "c", F.lit("s2")).otherwise(F.lit("s1"))
+    )
+    suite = RuleSuite([Rule("spans"), Rule("uniqueness", {"key": "src"})])
+    r = suite.run(spark, docs, store=LocalParquetCatalog(str(tmp_path / "store")))
+    got = {(x["doc_id"], x["rule_id"], x["partition_id"]) for x in r.violations.collect()}
+    assert got == {("s1", "unique.doc_id", 0)}
+    v = {x["partition_id"]: x for x in r.verdicts.collect() if x["rule_id"] == "unique.doc_id"}
+    assert v[0]["status"] == "Unhealthy" and v[0]["metrics"]["duplicate_rows"] == "2"
+    assert v[1]["status"] == "Healthy"
+
+
+def test_violations_come_from_the_latest_run_only(spark, tmp_path):
+    """Stored violations of an older eval_time in the same store never
+    leak into a later run's result: a T1 run over new docs returns the
+    violations of a fresh-store T1 run."""
+    docs0 = documents_interleaved(spark, 2000, n_partitions=2, seed=1)
+    docs1 = documents_interleaved(spark, 2000, n_partitions=2, seed=2)
+    rules = [Rule("spans"), Rule("uniqueness")]
+
+    def triplets(res):
+        return sorted(
+            (x["doc_id"], x["rule_id"], x["partition_id"]) for x in res.violations.collect()
+        )
+
+    store = LocalParquetCatalog(str(tmp_path / "shared"))
+    t0 = RuleSuite(rules, eval_time="2025-08-15 00:00:00").run(spark, docs0, store=store)
+    t1 = RuleSuite(rules, eval_time="2025-08-16 00:00:00").run(spark, docs1, store=store)
+    fresh = RuleSuite(rules, eval_time="2025-08-16 00:00:00").run(
+        spark, docs1, store=LocalParquetCatalog(str(tmp_path / "fresh"))
+    )
+    assert set(triplets(t0)) != set(triplets(fresh))
+    assert triplets(t1) == triplets(fresh)
+
+
+def _persisted_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+def test_missing_input_raises_before_any_work(spark, tmp_path):
+    """A missing required input is a config error: run() raises before
+    it writes anything or leaves any cache behind."""
+    docs = documents_interleaved(spark, 2000, n_partitions=2, seed=1)
+    store = LocalParquetCatalog(str(tmp_path / "store"))
+    before = _persisted_rdd_ids(spark)
+    suite = RuleSuite([Rule("spans"), Rule("uniqueness"), Rule("drift"), Rule("referential")])
+    with pytest.raises(ValueError, match="referential.*asset_catalog"):
+        suite.run(spark, docs, store=store)
+    assert not store.exists("_dq_lineage") and not store.exists("_dq_violations")
+    assert _persisted_rdd_ids(spark) <= before
+
+
+def test_environment_error_raises_and_releases_caches(spark, inputs, tmp_path, monkeypatch):
+    """A failed import is an environment error, not a data error: run()
+    raises it instead of degrading verdicts to Unknown, and the caches
+    of the rules that ran beside it are released."""
+    docs, cat, commits, _events = inputs
+    before = _persisted_rdd_ids(spark)
+    monkeypatch.setattr(
+        RuleSuite,
+        "_compile_docscan",
+        lambda self, *a, **k: (_ for _ in ()).throw(
+            ModuleNotFoundError("No module named 'anomaly_detection_spark'")
+        ),
+    )
+    suite = RuleSuite([Rule("profile"), Rule("spans"), Rule("uniqueness"), Rule("referential"), Rule("drift")])
+    with pytest.raises(ModuleNotFoundError):
+        suite.run(spark, docs, cat, commits, store=LocalParquetCatalog(str(tmp_path / "store")))
+    assert _persisted_rdd_ids(spark) <= before
+
+
+def test_worker_import_failure_is_an_environment_error():
+    from pyspark.errors import PythonException
+
+    from anomaly_detection_spark.plans.suite import _is_environment_error
+
+    worker = "An exception was thrown from the Python worker.\nModuleNotFoundError: No module named 'x'"
+    assert _is_environment_error(PythonException(message=worker))
+    assert _is_environment_error(ImportError("cannot import name 'y'"))
+    assert not _is_environment_error(PythonException(message="ZeroDivisionError: division by zero"))
+    assert not _is_environment_error(RuntimeError("model failed to converge"))
 
 
 def test_lineage_store_schema_migration(spark, tmp_path):
