@@ -54,25 +54,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _registered_persist(df: DataFrame, label: str) -> DataFrame:
-    """Persist a frame that multiple result branches re-scan (planted
-    media generators, derived fixtures), registered in the bounded house
-    cache registry: the NEXT invocation with the same label releases the
-    previous cache, so repeated bench/gate runs never accumulate
-    executor storage (the `_CAP_CACHES` discipline from operators/dedup)."""
-    from anomaly_detection_spark.operators.dedup import _CAP_CACHES
-
-    prev = _CAP_CACHES.pop(label, None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — best-effort release
-            pass
-    df = df.persist()
-    _CAP_CACHES[label] = df
-    return df
-
-
 def _ordered(label: str, df: DataFrame, *cols) -> DataFrame:
     """Persist a result frame, then apply its presentation ``orderBy``.
 
@@ -82,10 +63,12 @@ def _ordered(label: str, df: DataFrame, *cols) -> DataFrame:
     2x on the span/codec/scrub queries, whose plans are narrow
     scan->project->filter chains or mapInPandas decodes). Persisting the
     (bounded, result-sized) frame makes the sample job materialize the
-    cache and the sort read it back. Registered under the house bounded
-    cache registry: the next invocation with the same label releases the
-    previous cache."""
-    return _registered_persist(df, label).orderBy(*cols)
+    cache and the sort read it back. Registered under ``label`` (see
+    :func:`~anomaly_detection_spark.caching.cached`): the next invocation
+    with the same label releases the previous cache."""
+    from anomaly_detection_spark.caching import cached
+
+    return cached(label, df).orderBy(*cols)
 
 
 def _scaled10k(col, k: int = 4):
@@ -1699,6 +1682,7 @@ def _q_media_transform_synthetic(spark, sf_dir):
     fold ((k*29 + f*13 + i*5) % 256) — it can only match if the resize
     actually resampled the decoded raster and the sampler actually
     sliced the right frames."""
+    from anomaly_detection_spark.caching import cached
     from anomaly_detection_spark.operators.multimodal import (
         image_stats,
         planted_media,
@@ -1708,7 +1692,7 @@ def _q_media_transform_synthetic(spark, sf_dir):
 
     # persist the generated media across the resize and frame-sampling
     # branches
-    media = _registered_persist(planted_media(spark, 240), "q_media_transform")
+    media = cached("q_media_transform", planted_media(spark, 240))
     nb = F.lit(None).cast("bigint")
     resized = image_stats(resize_images(media, target_w=8, target_h=6)).select(
         "media_ref",
@@ -1795,6 +1779,7 @@ def _q_media_pipeline_synthetic(spark, sf_dir):
     without ever seeing the bytes — the only way the Spark side
     matches is by actually decoding (and for PNG, inflating) the
     payloads it generated."""
+    from anomaly_detection_spark.caching import cached
     from anomaly_detection_spark.operators.multimodal import (
         audio_stats,
         image_stats,
@@ -1805,7 +1790,7 @@ def _q_media_pipeline_synthetic(spark, sf_dir):
     # persist the generated media: the three kind-filtered stats
     # branches otherwise each re-run the Python generation stage
     # (PNG/zlib encode included)
-    media = _registered_persist(planted_media(spark, 240), "q_media_pipeline")
+    media = cached("q_media_pipeline", planted_media(spark, 240))
     nb = F.lit(None).cast("bigint")
     imgs = image_stats(media).select(
         "media_ref",
@@ -2161,6 +2146,7 @@ def _q_av_metadata_synthetic(spark, sf_dir):
     walking frame lengths (144000·kbps/rate + pad) and decoding the
     exp-Golomb SPS fields — full PCM/pixel decode stays out of scope
     (multimodal._stub_decode documents the boundary)."""
+    from anomaly_detection_spark.caching import cached
     from anomaly_detection_spark.operators.av_metadata import (
         h264_stats,
         mp3_stats,
@@ -2169,7 +2155,7 @@ def _q_av_metadata_synthetic(spark, sf_dir):
 
     # persist: the MP3 and H.264 branches otherwise each re-run the
     # Python generation stage
-    media = _registered_persist(planted_av_media(spark, 90), "q_av_metadata")
+    media = cached("q_av_metadata", planted_av_media(spark, 90))
     out = mp3_stats(media).unionByName(h264_stats(media))
     return _ordered(
         "q_av_metadata_out",
@@ -2690,6 +2676,7 @@ def _q_codec_pipeline_synthetic(spark, sf_dir):
     twin replays the G.711 bit math (integer &, <<, xor) and every
     MJPG pixel (flat q=8 DC-only frames -> sample = 128 + dc) without
     seeing the bytes."""
+    from anomaly_detection_spark.caching import cached
     from anomaly_detection_spark.operators.multimodal import (
         audio_stats,
         planted_g711_mjpg_media,
@@ -2698,7 +2685,7 @@ def _q_codec_pipeline_synthetic(spark, sf_dir):
 
     # persist: the audio and video branches otherwise each re-run the
     # Python generation stage (JPEG entropy encode included)
-    media = _registered_persist(planted_g711_mjpg_media(spark, 80), "q_codec_pipeline")
+    media = cached("q_codec_pipeline", planted_g711_mjpg_media(spark, 80))
     nb = F.lit(None).cast("bigint")
     auds = audio_stats(media).select(
         "media_ref",

@@ -35,7 +35,9 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
-from .dedup import _CAP_CACHES, _ensure_parallelism, word_shingles
+from anomaly_detection_spark.caching import broadcast_if_small, cached
+
+from .dedup import _ensure_parallelism, word_shingles
 
 __all__ = ["benchmark_ngrams", "ngram_overlap"]
 
@@ -108,21 +110,13 @@ def ngram_overlap(
     """
     key = (lambda c: hash_fn(c)) if hash_fn is not None else (lambda c: c)
 
-    bench = benchmark_ngrams(benchmark, k=k, text_col=bench_text_col, hash_fn=hash_fn)
-    # Count-guarded broadcast, house pattern: persist FIRST, count the
-    # persisted frame, then hint the SAME frame — lineage runs once and
-    # guard rows == join rows. Registered in the bounded cap-cache
-    # registry (one live cache per label; release_dedup_caches frees).
-    prev = _CAP_CACHES.pop("decontam_benchmark", None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — best-effort release
-            pass
-    bench = bench.persist()
-    _CAP_CACHES["decontam_benchmark"] = bench
-    if bench.count() <= broadcast_bound:
-        bench = F.broadcast(bench)
+    bench, _ = broadcast_if_small(
+        cached(
+            "decontam_benchmark",
+            benchmark_ngrams(benchmark, k=k, text_col=bench_text_col, hash_fn=hash_fn),
+        ),
+        broadcast_bound,
+    )
 
     doc_grams = (
         _ensure_parallelism(docs)

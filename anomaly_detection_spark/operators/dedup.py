@@ -26,6 +26,7 @@ import re
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from anomaly_detection_spark.caching import broadcast_if_small, cached
 from anomaly_detection_spark.operators.text import fingerprint
 
 _LOG = logging.getLogger("anomaly_detection_spark.dedup")
@@ -197,26 +198,6 @@ def _expand_rep_pairs(
     return across.unionByName(within)
 
 
-_CAP_CACHES: dict[str, DataFrame] = {}
-
-
-def release_dedup_caches() -> None:
-    """Unpersist every signature cache registered by a candidate
-    pipeline (:func:`minhash_lsh_candidates`,
-    :func:`simhash_near_duplicates`, ``embedding_near_duplicates``).
-    Call after materializing candidate-pair output in a long-lived
-    session to return the executor storage immediately; otherwise each
-    label's cache is released automatically on the NEXT candidate call
-    with that label (bounded: at most one live cache per pipeline
-    label, never an unbounded accumulation)."""
-    for df in list(_CAP_CACHES.values()):
-        try:
-            df.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — best-effort release
-            pass
-    _CAP_CACHES.clear()
-
-
 def _cap_buckets(
     keyed: DataFrame,
     bucket_cols: list[str],
@@ -245,18 +226,8 @@ def _cap_buckets(
     # side. Cached row width varies by pipeline: ids + bucket keys for
     # the text paths, id + bucket + the full vector for the embedding
     # path (the self-join needs the vectors for the cosine verify).
-    # Lifetime is BOUNDED: registering under ``label`` releases the
-    # previous cache for that label, so repeated candidate calls hold
-    # at most one cache per pipeline; `release_dedup_caches()` frees
-    # them eagerly once output is materialized.
-    prev = _CAP_CACHES.pop(label, None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — best-effort release
-            pass
-    keyed = keyed.persist()
-    _CAP_CACHES[label] = keyed
+    # Lifetime is bounded: one live cache per pipeline label.
+    keyed = cached(label, keyed)
     sizes = keyed.groupBy(*bucket_cols).agg(F.count(F.lit(1)).alias("_bs"))
     over = F.col("_bs") > max_bucket_size
     row = sizes.agg(
@@ -509,15 +480,8 @@ def jaccard_verify(
     and without a cache the whole LSH subtree re-executes for each.
     The cache registers under the ``jaccard_verify`` label — bounded
     like the signature caches (released on the next call or via
-    :func:`release_dedup_caches`)."""
-    prev = _CAP_CACHES.pop("jaccard_verify", None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — best-effort release
-            pass
-    candidates = candidates.persist()
-    _CAP_CACHES["jaccard_verify"] = candidates
+    :func:`~anomaly_detection_spark.caching.release_caches`)."""
+    candidates = cached("jaccard_verify", candidates)
     cand_ids = candidates.select(F.col("id_a").alias(id_col)).union(
         candidates.select(F.col("id_b").alias(id_col))
     ).distinct()
@@ -963,9 +927,8 @@ def _dup_line_flags(
     df: DataFrame, id_col, text_col, hash_fn, min_docs, broadcast_bound
 ) -> DataFrame:
     """Shared core: the exploded line stream with a ``_dup`` flag per
-    line. The dup-key frame is persisted+counted first, then broadcast
-    iff under ``broadcast_bound`` (cap-cache registered under
-    ``line_dedup_keys``)."""
+    line. The dup-key frame is cached under ``line_dedup_keys`` and
+    broadcast iff under ``broadcast_bound``."""
     lines = _doc_lines(df, id_col, text_col, hash_fn)
     dup_keys = (
         lines.where(F.col("_k").isNotNull())
@@ -974,16 +937,7 @@ def _dup_line_flags(
         .where(F.col("_nd") >= int(min_docs))
         .select(F.col("_k").alias("_dk"))
     )
-    prev = _CAP_CACHES.pop("line_dedup_keys", None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — best-effort release
-            pass
-    dup_keys = dup_keys.persist()
-    _CAP_CACHES["line_dedup_keys"] = dup_keys
-    if dup_keys.count() <= broadcast_bound:
-        dup_keys = F.broadcast(dup_keys)
+    dup_keys, _ = broadcast_if_small(cached("line_dedup_keys", dup_keys), broadcast_bound)
     joined = lines.join(dup_keys, lines["_k"] == dup_keys["_dk"], "left")
     return joined.select(
         "_id", "_pos", "_line", F.col("_dk").isNotNull().alias("_dup")
@@ -1077,29 +1031,25 @@ def duplicate_clusters(
     with a limit-1 scan of the cached frame) — no extra new-vs-old join
     per round. The final label frame stays persisted for the caller's
     downstream join and is registered under the ``duplicate_clusters``
-    cache label (house bounded-cache discipline: the next call releases
-    it; :func:`release_dedup_caches` frees it eagerly). For graphs with
-    pathological diameters (not near-dup shaped), the alternating
-    large-star/small-star variant cuts rounds to O(log n) — out of
-    scope here by the diameter argument above.
+    cache label (the next call releases it;
+    :func:`~anomaly_detection_spark.caching.release_caches` frees it
+    eagerly). For graphs with pathological diameters (not near-dup
+    shaped), the alternating large-star/small-star variant cuts rounds
+    to O(log n) — out of scope here by the diameter argument above.
     """
     half = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     edges = half.unionByName(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).persist()
-    labels = (
+    # registering the first round's frame releases the previous call's
+    # clusters before this call caches anything
+    labels = cached(
+        "duplicate_clusters",
         edges.groupBy("src")
         .agg(F.least(F.first("src"), F.min("dst")).alias("label"))
-        .withColumnRenamed("src", "node")
-        .persist()
+        .withColumnRenamed("src", "node"),
     )
     labels.count()
-    prev = _CAP_CACHES.pop("duplicate_clusters", None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — best-effort release
-            pass
     def _hop(lbl: DataFrame) -> DataFrame:
         """One min-label propagation step over the edge list; extra
         columns (the round's ``_old`` label) pass through untouched."""
@@ -1138,8 +1088,7 @@ def duplicate_clusters(
             labels.unpersist(blocking=False)
             labels = new_labels
             if changed == 0:
-                _CAP_CACHES["duplicate_clusters"] = labels
-                return labels.select(
+                return cached("duplicate_clusters", labels).select(
                     F.col("node").alias("doc_id"), F.col("label").alias("cluster_rep")
                 )
         labels.unpersist(blocking=False)

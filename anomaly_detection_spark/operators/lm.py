@@ -41,8 +41,10 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from anomaly_detection_spark.caching import broadcast_if_small, cached
+
 from .decontam import _doc_shingles
-from .dedup import _CAP_CACHES, _ensure_parallelism
+from .dedup import _ensure_parallelism
 
 __all__ = ["bigram_lm", "lm_perplexity"]
 
@@ -97,21 +99,9 @@ def lm_perplexity(
     under bounded cache labels) — at web scale the corpus pays one
     scan, one explode, two broadcast joins, and one per-doc aggregate."""
     unigrams, bigrams = bigram_lm(reference, text_col=ref_text_col)
-    # V = |vocab| — one scalar from the already-aggregated unigram table
-    sized = []
-    for label, frame in (("lm_unigrams", unigrams), ("lm_bigrams", bigrams)):
-        prev = _CAP_CACHES.pop(label, None)
-        if prev is not None:
-            try:
-                prev.unpersist(blocking=False)
-            except Exception:  # noqa: BLE001 — best-effort release
-                pass
-        frame = frame.persist()
-        _CAP_CACHES[label] = frame
-        n = frame.count()
-        sized.append(F.broadcast(frame) if n <= broadcast_bound else frame)
-    unigrams, bigrams = sized
-    vocab = _CAP_CACHES["lm_unigrams"].count()  # cached — no extra scan
+    # V = |vocab| is the unigram table's guard count
+    unigrams, vocab = broadcast_if_small(cached("lm_unigrams", unigrams), broadcast_bound)
+    bigrams, _ = broadcast_if_small(cached("lm_bigrams", bigrams), broadcast_bound)
     if vocab == 0:
         # ln(c + V) with V=0 is ln(0) — NULL in Spark, an error in
         # other engines; an LM trained on nothing scores nothing.

@@ -24,6 +24,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from anomaly_detection_spark.caching import broadcast_if_small, cached
+
 
 def _media_refs(documents: DataFrame) -> DataFrame:
     """Distinct non-null, non-empty media_refs across all docs.
@@ -72,16 +74,18 @@ def ri_violations(
     counted (cheap: it is post-distinct, post-anti-join), and broadcast
     only when it fits; otherwise a plain join lets AQE/sort-merge handle
     it. Pass ``cache`` (a list) to receive the persisted DataFrame for
-    release after materialization; with ``broadcast_threshold_rows=None``
-    no count/persist happens at all."""
+    release after materialization; without one it is cached under the
+    ``ri_dangling`` label. With ``broadcast_threshold_rows=None`` no
+    count/persist happens at all."""
     dangling = dangling_refs(documents, catalog, broadcast_catalog)
     dang_set = dangling.select(F.col("media_ref").alias("_dangling_ref"))
     if broadcast_threshold_rows is not None:
-        dang_set = dang_set.persist()
-        if cache is not None:
+        if cache is None:
+            dang_set = cached("ri_dangling", dang_set)
+        else:
+            dang_set = dang_set.persist()
             cache.append(dang_set)
-        if dang_set.count() <= broadcast_threshold_rows:
-            dang_set = F.broadcast(dang_set)
+        dang_set, _ = broadcast_if_small(dang_set, broadcast_threshold_rows)
     # Explode to find affected docs cheaply, then re-filter the original
     # span array so offending spans stay in document order.
     #

@@ -28,7 +28,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
-from .dedup import _CAP_CACHES
+from anomaly_detection_spark.caching import broadcast_if_small, cached
 
 
 def dot(a: Column | str, b: Column | str) -> Column:
@@ -85,12 +85,6 @@ def brute_force_topk(
     each query's scored rows spread over many reducers; phase 2 merges
     the ≤ k rows per (query, partition) — a per-query hot reducer never
     sees more than k·P rows."""
-    # House pattern (round 2): persist the small side FIRST, count the
-    # persisted frame, then broadcast the SAME frame — the query lineage
-    # executes once, and a non-deterministic query frame can't diverge
-    # between the guard count and the broadcast rows. Registered in the
-    # bounded cap-cache registry so repeated calls hold one cache and
-    # release_dedup_caches() frees it.
     # norm computed once per QUERY row here (and once per corpus row
     # below) instead of once per scored pair — see _cosine_pre
     q_side = queries.select(
@@ -98,21 +92,7 @@ def brute_force_topk(
         F.col(vec_col).alias("_qv"),
         l2_norm(F.col(vec_col)).alias("_qn"),
     )
-    prev = _CAP_CACHES.pop("brute_force_topk_queries", None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — best-effort release
-            pass
-    q_side = q_side.persist()
-    _CAP_CACHES["brute_force_topk_queries"] = q_side
-    # FULL count, not limit(N+1).count(): LocalLimit's incremental job
-    # caches only the partitions it scanned to reach N+1 rows, so a
-    # limit-probe would leave the rest of a non-deterministic query
-    # frame to be recomputed at broadcast time — the exact guard-vs-
-    # broadcast divergence the persist-first pattern exists to prevent.
-    # The full count also materializes every partition into the cache.
-    n_q = q_side.count()
+    q, n_q = broadcast_if_small(cached("brute_force_topk_queries", q_side), max_broadcast_queries)
     if n_q > max_broadcast_queries:
         raise ValueError(
             f"brute_force_topk broadcasts the query side; got > "
@@ -120,7 +100,6 @@ def brute_force_topk(
             f"for query sets that large, or raise max_broadcast_queries "
             f"if the executors can hold them"
         )
-    q = F.broadcast(q_side)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv"),
@@ -844,23 +823,32 @@ def pq_train(
 
     from concurrent.futures import ThreadPoolExecutor
 
-    with ThreadPoolExecutor(max_workers=m) as pool:
-        raw_cbs = list(pool.map(_train_sub, range(m)))
-    parts = [
-        cb.select(F.lit(s).cast("int").alias("sub"), "idx", "vec", "hn")
-        for s, cb in enumerate(raw_cbs)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    # cut lineage to the persisted per-subspace frames, then release
-    # them — the returned codebook is m·ksub rows of (sub, idx, vec, hn)
-    out = out.localCheckpoint()
-    for cb in raw_cbs:
-        try:
-            cb.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — best-effort release
-            pass
+    # at most 8 concurrent trainings: past that their stages only queue
+    # for the same cores, and every thread holds a driver-side job
+    with ThreadPoolExecutor(max_workers=min(m, 8)) as pool:
+        futures = [pool.submit(_train_sub, s) for s in range(m)]
+    # every finished subspace leaves a persisted frame, released below
+    # also when another subspace failed
+    raw_cbs = [f.result() for f in futures if f.exception() is None]
+    try:
+        if len(raw_cbs) < m:
+            raise next(f.exception() for f in futures if f.exception() is not None)
+        parts = [
+            cb.select(F.lit(s).cast("int").alias("sub"), "idx", "vec", "hn")
+            for s, cb in enumerate(raw_cbs)
+        ]
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        # cut lineage to the persisted per-subspace frames before the
+        # release below — the codebook is m·ksub rows of (sub, idx, vec, hn)
+        out = out.localCheckpoint()
+    finally:
+        for cb in raw_cbs:
+            try:
+                cb.unpersist(blocking=False)
+            except Exception:  # noqa: BLE001 — best-effort release
+                pass
     return out
 
 
@@ -959,12 +947,6 @@ def pq_topk(
     q_side = queries.filter(_finite_vec(F.col(vec_col))).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")
     )
-    prev = _CAP_CACHES.pop("pq_topk_queries", None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — best-effort release
-            pass
     # LUT build: explode the m subspaces on the SMALL query side (same
     # shape as pq_encode), score each subvector against that sub's
     # centroids with one single-level transform, and re-pack per query
@@ -1000,14 +982,11 @@ def pq_topk(
             F.array_sort(F.collect_list(F.struct("_s", "_lrow"))), lambda st: st["_lrow"]
         ).alias("_lut")
     )
-    q_built = luts.persist()
-    _CAP_CACHES["pq_topk_queries"] = q_built
-    n_q = q_built.count()
+    q, n_q = broadcast_if_small(cached("pq_topk_queries", luts), max_broadcast_queries)
     if n_q > max_broadcast_queries:
         raise ValueError(
             f"pq_topk broadcasts the query LUTs; got > {max_broadcast_queries} query rows"
         )
-    q = F.broadcast(q_built)
     scored = (
         corpus_codes.select(F.col(id_col).alias("neighbor_id"), "codes")
         .join(q, F.col("query_id") != F.col("neighbor_id"))
@@ -1192,19 +1171,11 @@ def ivfpq_topk(
             F.array_sort(F.collect_list(F.struct("_s", "_lrow"))), lambda st: st["_lrow"]
         ).alias("_lut")
     )
-    prev = _CAP_CACHES.pop("ivfpq_topk_queries", None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — best-effort release
-            pass
-    luts = luts.persist()
-    _CAP_CACHES["ivfpq_topk_queries"] = luts
-    if luts.count() > max_broadcast_queries:
+    q, n_q = broadcast_if_small(cached("ivfpq_topk_queries", luts), max_broadcast_queries)
+    if n_q > max_broadcast_queries:
         raise ValueError(
             f"ivfpq_topk broadcasts per-(query, cell) LUTs; got > {max_broadcast_queries} rows"
         )
-    q = F.broadcast(luts)
     scored = (
         corpus_codes.select(F.col(id_col).alias("neighbor_id"), F.col("cell"), "codes")
         .join(q, (F.col("cell") == F.col("_cell")) & (F.col("query_id") != F.col("neighbor_id")))
@@ -1256,16 +1227,11 @@ def refine_topk(
     broadcast-hash join that plucks candidate vectors; query vectors
     attach by a second guarded broadcast; the re-rank window sees ≤ R
     rows per query. No shuffle ever touches the corpus side."""
-    pairs = candidates.select("query_id", "neighbor_id")
-    prev = _CAP_CACHES.pop("refine_topk_pairs", None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — best-effort release
-            pass
-    pairs = pairs.persist()
-    _CAP_CACHES["refine_topk_pairs"] = pairs
-    if pairs.count() > max_broadcast_candidates:
+    pairs, n_pairs = broadcast_if_small(
+        cached("refine_topk_pairs", candidates.select("query_id", "neighbor_id")),
+        max_broadcast_candidates,
+    )
+    if n_pairs > max_broadcast_candidates:
         raise ValueError(
             f"refine_topk broadcasts the candidate pair set; got > "
             f"{max_broadcast_candidates} rows — lower the ANN stage's "
@@ -1275,7 +1241,7 @@ def refine_topk(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv"),
         l2_norm(F.col(vec_col)).alias("_cn"),
-    ).join(F.broadcast(pairs), "neighbor_id")
+    ).join(pairs, "neighbor_id")
     qv = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),

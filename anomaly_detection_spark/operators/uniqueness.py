@@ -20,6 +20,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from anomaly_detection_spark.caching import broadcast_if_small, cached
+
 
 def duplicate_keys(df: DataFrame, key: str, salt_buckets: int = 64) -> DataFrame:
     """Keys appearing more than once: (key, dup_count). Salted two-phase."""
@@ -49,13 +51,11 @@ def duplicate_rows(
     the set, count it, broadcast only under the bound (skipping the full
     shuffle write of the big side); above the bound it is a plain join —
     sort-merge, never an OOM. ``None`` disables the guard (plain join,
-    AQE decides)."""
-    dups = duplicate_keys(df, key, salt_buckets)
-    right = dups.select(key, "dup_count")
+    AQE decides). The guarded set is cached under the
+    ``uniqueness_dup_keys`` label."""
+    right = duplicate_keys(df, key, salt_buckets).select(key, "dup_count")
     if broadcast_threshold_rows is not None:
-        right = right.persist()
-        if right.count() <= broadcast_threshold_rows:
-            right = F.broadcast(right)
+        right, _ = broadcast_if_small(cached("uniqueness_dup_keys", right), broadcast_threshold_rows)
     return df.join(right, on=key, how="inner")
 
 

@@ -20,6 +20,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from anomaly_detection_spark.caching import broadcast_if_small, cached
+
 # class bodies shared by the normalization rules, the URL terminator
 # and the n_upunct metric (and, via the shared constants, the DuckDB
 # oracle twin)
@@ -166,21 +168,13 @@ def blocklist_hits(
     dot-suffixes and equi-joins the list. Docs without URLs keep their
     row (explode_outer) with zeros. The blocklist rides the house
     count-guarded broadcast (persist first, count the persisted frame,
-    hint the same frame; registered in the dedup cap-cache registry so
+    hint the same frame; registered under a bounded cache label so
     repeated calls don't accumulate executor storage).
     """
-    from anomaly_detection_spark.operators.dedup import _CAP_CACHES
-
-    prev = _CAP_CACHES.pop("webtext_blocklist", None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:  # noqa: BLE001 — best-effort release
-            pass
-    bl = blocklist.select(F.col(domain_col).alias("_bl")).distinct().persist()
-    _CAP_CACHES["webtext_blocklist"] = bl
-    if bl.count() <= broadcast_bound:
-        bl = F.broadcast(bl)
+    bl, _ = broadcast_if_small(
+        cached("webtext_blocklist", blocklist.select(F.col(domain_col).alias("_bl")).distinct()),
+        broadcast_bound,
+    )
 
     urls = df.select(
         F.col(id_col).alias("_id"), F.explode_outer(extract_domains(text_col)).alias("_host")

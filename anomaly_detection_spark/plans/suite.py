@@ -30,6 +30,7 @@ from typing import Any
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
+from anomaly_detection_spark.caching import broadcast_if_small
 from anomaly_detection_spark.operators import verdict as V
 from anomaly_detection_spark.operators.profile import ProfileSpec, profile_long
 from anomaly_detection_spark.operators.referential import ri_violations
@@ -249,9 +250,9 @@ class RuleSuite:
         # bound we broadcast (avoiding a full shuffle WRITE of the big
         # side — AQE's runtime conversion still pays that), above it we
         # fall back to a plain join and let AQE/sort-merge handle it.
-        n_dup = dup_keys.count()
-        bound = int(rule.params.get("broadcast_threshold_rows", 1_000_000))
-        dk = F.broadcast(dup_keys) if n_dup <= bound else dup_keys
+        dk, _ = broadcast_if_small(
+            dup_keys, int(rule.params.get("broadcast_threshold_rows", 1_000_000))
+        )
         return per_pk, dk, key
 
     def _uniqueness_verdicts(
@@ -387,7 +388,6 @@ class RuleSuite:
             .persist()
         )
         s.cache.append(viol_all)
-        viol_all.count()  # materialize the single shared scan here
 
         out = {}
         if "spans" in by_kind:

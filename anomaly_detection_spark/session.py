@@ -46,9 +46,9 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # AQE partition coalescing is DISABLED inside cached plans by
-        # default; this engine persists intermediates deliberately (the
-        # bounded _CAP_CACHES registry, count-guarded broadcasts, the
-        # pre-sort result caches), and event-log profiling showed their
+        # default; this engine persists intermediates deliberately
+        # (caching.py's bounded per-label caches and guarded broadcasts,
+        # the pre-sort result caches), and event-log profiling showed their
         # materialization jobs running full-width non-coalesced shuffle
         # stages. Allowing AQE to change cached-plan output partitioning
         # is safe here by construction: every order-sensitive aggregate

@@ -3,14 +3,19 @@ __spark_entry__ query against its DuckDB oracle at a given sf and
 compare row-count + column names + order-insensitive value multiset.
 
 Usage: python scripts/check_oracle.py [sf_dir] [query_name ...]
+
+Without names it runs the gate queries; named queries may also be
+extras outside the gate (``all_queries()``, checked against their
+``_oracle_sql_all()`` twin), and an unknown name is an error.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -36,12 +41,18 @@ def rows_to_multiset(cols, rows):
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    if only:
+        qs, oracles = entrymod.all_queries(), entrymod._oracle_sql_all()
+        unknown = sorted(only - qs.keys())
+        if unknown:
+            sys.exit(f"unknown query name(s): {', '.join(unknown)}")
+    else:
+        qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     spark = get_spark(master="local[8]")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures = []
     for name, fn in qs.items():
         if only and name not in only:

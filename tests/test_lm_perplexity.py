@@ -103,7 +103,7 @@ def test_lm_gate_log_columns_decisive(spark):
 
 
 def test_lm_tables_are_guard_broadcast_and_bounded_cached(spark):
-    from anomaly_detection_spark.operators.dedup import _CAP_CACHES
+    from anomaly_detection_spark.caching import _CAP_CACHES
     from anomaly_detection_spark.operators.lm import lm_perplexity
 
     ref = spark.createDataFrame([(i, f"w{i % 5} w{(i + 1) % 5} tail") for i in range(20)], DOCS)

@@ -74,7 +74,7 @@ def test_no_forced_broadcast_of_data_dependent_sets(spark, docs_parquet):
     broadcast HINT — with autoBroadcastJoinThreshold disabled, any
     BroadcastExchange left can only come from a forced F.broadcast."""
     from anomaly_detection_spark.operators.referential import ri_violations
-    from anomaly_detection_spark.operators.uniqueness import duplicate_rows
+    from anomaly_detection_spark.operators.uniqueness import duplicate_keys, duplicate_rows
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -85,6 +85,14 @@ def test_no_forced_broadcast_of_data_dependent_sets(spark, docs_parquet):
         # under the bound → the guarded broadcast IS taken
         plan = formatted_plan(duplicate_rows(docs_parquet, "doc_id"))
         assert "BroadcastExchange" in plan
+        # the guard's edge: a set of exactly `bound` rows is broadcast,
+        # one row over the bound is not
+        n = duplicate_keys(docs_parquet, "doc_id").count()
+        assert n > 0
+        plan = formatted_plan(duplicate_rows(docs_parquet, "doc_id", broadcast_threshold_rows=n))
+        assert "BroadcastHashJoin" in plan
+        plan = formatted_plan(duplicate_rows(docs_parquet, "doc_id", broadcast_threshold_rows=n - 1))
+        assert "BroadcastExchange" not in plan and "BroadcastHashJoin" not in plan
 
         # broadcast_catalog=False isolates the data-dependent side: any
         # remaining hint could only be on the dangling-set joins

@@ -556,21 +556,18 @@ def _persistent_rdd_ids(spark):
 def test_cap_bucket_caches_bounded_and_releasable(spark):
     """Repeated candidate calls must not accumulate signature caches:
     each call replaces its label's previous cache, and
-    release_dedup_caches() drops them all once output is materialized."""
-    from anomaly_detection_spark.operators.dedup import (
-        _CAP_CACHES,
-        minhash_lsh_candidates,
-        release_dedup_caches,
-    )
+    release_caches() drops them all once output is materialized."""
+    from anomaly_detection_spark.caching import _CAP_CACHES, release_caches
+    from anomaly_detection_spark.operators.dedup import minhash_lsh_candidates
 
-    release_dedup_caches()
+    release_caches()
     before = _persistent_rdd_ids(spark)
     docs = docs_df(spark, [(i, f"doc number {i} alpha beta gamma delta") for i in range(40)])
     for _ in range(3):
         minhash_lsh_candidates(docs, max_bucket_size=64).count()
         assert len(_CAP_CACHES) == 1  # one live cache per label, not 3
     assert len(_persistent_rdd_ids(spark) - before) <= 1
-    release_dedup_caches()
+    release_caches()
     assert not _CAP_CACHES
     assert _persistent_rdd_ids(spark) <= before
 
@@ -578,9 +575,9 @@ def test_cap_bucket_caches_bounded_and_releasable(spark):
 def test_embedding_cap_cache_released(spark):
     import numpy as np
 
-    from anomaly_detection_spark.operators.dedup import _CAP_CACHES, release_dedup_caches
+    from anomaly_detection_spark.caching import _CAP_CACHES, release_caches
 
-    release_dedup_caches()
+    release_caches()
     before = _persistent_rdd_ids(spark)
     rng = np.random.default_rng(11)
     rows = [(i, [float(x) for x in rng.standard_normal(16)]) for i in range(30)]
@@ -588,7 +585,7 @@ def test_embedding_cap_cache_released(spark):
     for _ in range(2):
         embedding_near_duplicates(emb, threshold=0.99, dim=16).count()
     assert len(_CAP_CACHES) == 1
-    release_dedup_caches()
+    release_caches()
     assert _persistent_rdd_ids(spark) <= before
 
 
@@ -943,6 +940,41 @@ def test_pq_train_validates_inputs(spark):
     empty = spark.createDataFrame([], "vec_id bigint, embedding array<float>")
     with _pytest.raises(ValueError, match="empty"):
         pq_train(empty, m=1, ksub=2)
+
+
+def test_pq_train_releases_finished_subspaces_when_one_fails(spark, monkeypatch):
+    """A failing subspace training propagates its error, and the
+    codebook frames the other subspaces already returned are released.
+    (Their seed localCheckpoints stay registered until the context
+    cleaner reclaims them, so the test reads the frames' storage levels
+    rather than the persisted-RDD set.)"""
+    import itertools
+
+    import numpy as np
+    import pytest as _pytest
+
+    import anomaly_detection_spark.operators.similarity as sim
+
+    calls = itertools.count()
+    real = sim.ivf_train
+    returned = []
+
+    def flaky(*args, **kwargs):
+        if next(calls) == 1:
+            raise RuntimeError("subspace training failed")
+        returned.append(real(*args, **kwargs))
+        return returned[-1]
+
+    monkeypatch.setattr(sim, "ivf_train", flaky)
+    rng = np.random.default_rng(3)
+    rows = [(i, [float(x) for x in rng.standard_normal(6)]) for i in range(12)]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    with _pytest.raises(RuntimeError, match="subspace training failed"):
+        sim.pq_train(emb, m=3, ksub=2, iters=1)
+    assert len(returned) == 2
+    for cb in returned:
+        level = cb.storageLevel
+        assert not (level.useMemory or level.useDisk), level
 
 
 def test_ivfpq_recovers_planted_clusters(spark):

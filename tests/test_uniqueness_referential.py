@@ -69,6 +69,32 @@ def test_dangling_refs_and_violation_rows(spark):
     assert viol["d3"]["partition_id"] == 1
 
 
+def test_guard_caches_are_bounded_per_label_and_releasable(spark):
+    """Without a run-local cache list, the guarded sets of duplicate_rows
+    and ri_violations are cached under one label each: repeated calls
+    hold at most one cache per label, and release_caches() frees them."""
+    from anomaly_detection_spark.caching import release_caches
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    release_caches()
+    before = persisted()
+    docs = make_docs(
+        spark,
+        [("a", 0, [M("ghost-1", 0)]), ("a", 1, [T("x", 0)]), ("b", 0, [M("asset-1", 0)])],
+    )
+    catalog = spark.createDataFrame([("asset-1",)], "media_ref string")
+    for _ in range(2):
+        assert duplicate_rows(docs, "doc_id").count() == 2
+    assert len(persisted() - before) <= 1
+    for _ in range(2):
+        assert ri_violations(docs, catalog).count() == 1
+    assert len(persisted() - before) <= 2
+    release_caches()
+    assert persisted() == before
+
+
 def test_clean_docs_have_no_dangling(spark):
     from anomaly_detection_spark.sources.synthetic import asset_catalog, documents_interleaved
 
