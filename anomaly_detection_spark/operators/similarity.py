@@ -1225,8 +1225,9 @@ def refine_topk(
     Scale shape: the id-pair set (≤ |Q|·R rows, two ids wide) rides the
     house count-guarded broadcast, so the corpus streams ONCE through a
     broadcast-hash join that plucks candidate vectors; query vectors
-    attach by a second guarded broadcast; the re-rank window sees ≤ R
-    rows per query. No shuffle ever touches the corpus side."""
+    attach by a second guarded broadcast (a plain join when the query
+    set exceeds ``max_broadcast_candidates``); the re-rank window sees
+    ≤ R rows per query. No shuffle ever touches the corpus side."""
     pairs, n_pairs = broadcast_if_small(
         cached("refine_topk_pairs", candidates.select("query_id", "neighbor_id")),
         max_broadcast_candidates,
@@ -1242,12 +1243,20 @@ def refine_topk(
         F.col(vec_col).alias("_cv"),
         l2_norm(F.col(vec_col)).alias("_cn"),
     ).join(pairs, "neighbor_id")
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
-        l2_norm(F.col(vec_col)).alias("_qn"),
+    # query vectors: broadcast within the same bound, a plain join
+    # above it (no raise — the pair set already bounds the re-rank)
+    qv, _ = broadcast_if_small(
+        cached(
+            "refine_topk_queries",
+            queries.select(
+                F.col(id_col).alias("query_id"),
+                F.col(vec_col).alias("_qv"),
+                l2_norm(F.col(vec_col)).alias("_qn"),
+            ),
+        ),
+        max_broadcast_candidates,
     )
-    scored = cand_vecs.join(F.broadcast(qv), "query_id").select(
+    scored = cand_vecs.join(qv, "query_id").select(
         "query_id",
         "neighbor_id",
         _cosine_pre("_qv", "_cv", F.col("_qn"), F.col("_cn")).alias("_sim"),

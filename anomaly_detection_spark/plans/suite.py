@@ -11,12 +11,12 @@ LOGGING_TABLE_SCHEMA, anomalydetection/utils/logging_table_utils.py:
 resumes by anti-joining pending partitions against completed
 (config_hash, partition_id, rule_id) lineage rows (SURVEY.md §3.5).
 
-Crash consistency: for each rule, violations are written BEFORE the
-lineage rows that mark (rule, partition) complete; readers treat a
-violation row as authoritative only where the latest lineage row for
-its (rule, partition) carries the same run_id, so a crash between the
-two writes re-runs the rule and the orphaned violations are ignored
-(and deduplicated on read).
+Crash consistency: each rule group appends its violations BEFORE the
+lineage rows that mark its (rule, partition) pairs complete; readers
+treat a violation row as authoritative only where the latest lineage
+row for its (rule, partition) carries the same run_id, so a crash
+between the two appends re-runs the whole group and the orphaned
+violations are ignored (and deduplicated on read).
 """
 
 from __future__ import annotations
@@ -30,7 +30,7 @@ from typing import Any
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
-from anomaly_detection_spark.caching import broadcast_if_small
+from anomaly_detection_spark.caching import broadcast_if_small, cached
 from anomaly_detection_spark.operators import verdict as V
 from anomaly_detection_spark.operators.profile import ProfileSpec, profile_long
 from anomaly_detection_spark.operators.referential import ri_violations
@@ -136,6 +136,7 @@ class _Scope:
     store: LocalParquetCatalog
     eval_ts: Column  # the suite's eval_time as a timestamp
     cache: list[DataFrame]  # persisted intermediates, released when run() exits
+    lineage_existed: bool  # the lineage store held rows before this run
 
 
 def _is_environment_error(e: Exception) -> bool:
@@ -204,7 +205,7 @@ class RuleSuite:
         )
 
     # ---- rule compilers: (scope, rules of one group) → one
-    # (verdicts_df, violations_df | None) per rule, in order ----
+    # (verdicts_df, violations_df | None) pair for the whole group ----
 
     def _span_verdicts(self, viol: DataFrame, partitions: DataFrame) -> DataFrame:
         counts = viol.groupBy("partition_id", "rule_id").agg(F.count(F.lit(1)).alias("n_viol"))
@@ -290,7 +291,7 @@ class RuleSuite:
         )
         return verdicts
 
-    def _compile_referential(self, s: _Scope, rules: list[Rule]) -> list[tuple[DataFrame, DataFrame]]:
+    def _compile_referential(self, s: _Scope, rules: list[Rule]) -> tuple[DataFrame, DataFrame]:
         (rule,) = rules
         viol = ri_violations(
             s.docs,
@@ -312,9 +313,9 @@ class RuleSuite:
                 "metrics"
             ),
         )
-        return [(verdicts, viol)]
+        return verdicts, viol
 
-    def _compile_docscan(self, s: _Scope, rules: list[Rule]) -> list[tuple[DataFrame, DataFrame]]:
+    def _compile_docscan(self, s: _Scope, rules: list[Rule]) -> tuple[DataFrame, DataFrame]:
         """ONE pass over the spans column for the span-invariant and
         uniqueness-violation rules, whichever of the two are in the
         group.
@@ -324,7 +325,9 @@ class RuleSuite:
         scan), then a SINGLE spans-reading pass — enriched with the
         count-guarded dup-key broadcast — gates each doc (short-
         circuiting exists / dup flag) and materializes both rules'
-        offending span subsequences at once.
+        offending span subsequences at once. The group's verdicts are
+        the union of both rules' rows and its violations are the one
+        scan output, so the group commits as one write.
 
         Referential integrity deliberately does NOT join this scan: its
         membership test against the data-dependent dangling-ref set is
@@ -385,20 +388,20 @@ class RuleSuite:
                 F.col("r.rule_id").alias("rule_id"),
                 F.col("r.offending_spans").alias("offending_spans"),
             )
-            .persist()
         )
-        s.cache.append(viol_all)
 
-        out = {}
+        verdicts = []
         if "spans" in by_kind:
             sv = viol_all.filter(F.col("rule_id").isin(list(SPAN_RULES)))
-            out["spans"] = (self._span_verdicts(sv, s.spine), sv)
+            verdicts.append(self._span_verdicts(sv, s.spine))
         if "uniqueness" in by_kind:
-            uv = viol_all.filter(F.col("rule_id") == RULE_UNIQUE)
-            out["uniqueness"] = (self._uniqueness_verdicts(per_pk, dk, key, s.spine), uv)
-        return [out[r.kind] for r in rules]
+            verdicts.append(self._uniqueness_verdicts(per_pk, dk, key, s.spine))
+        out = verdicts[0]
+        for v in verdicts[1:]:
+            out = out.unionByName(v)
+        return out, viol_all
 
-    def _compile_profile(self, s: _Scope, rules: list[Rule]) -> list[tuple[DataFrame, None]]:
+    def _compile_profile(self, s: _Scope, rules: list[Rule]) -> tuple[DataFrame, None]:
         (rule,) = rules
         null_rate_max = rule.params.get("null_rate_max")
         # size via the offset LEAF, not the struct: size(spans) forces the
@@ -426,9 +429,9 @@ class RuleSuite:
             status.alias("status"),
             F.col("metrics"),
         )
-        return [(verdicts, None)]
+        return verdicts, None
 
-    def _compile_drift(self, s: _Scope, rules: list[Rule]) -> list[tuple[DataFrame, None]]:
+    def _compile_drift(self, s: _Scope, rules: list[Rule]) -> tuple[DataFrame, None]:
         """A12: distribution drift of a per-doc expression vs the PREVIOUS
         run's histogram for the same rule, read back from the lineage
         table (latest-row-per-group over past runs, any config hash —
@@ -473,10 +476,13 @@ class RuleSuite:
         # constant number of runs instead of scanning the full history;
         # a baseline older than the bound degrades to Unknown, which is
         # the honest verdict for a table that hasn't been checked in
-        # months anyway.
+        # months anyway. A store that was empty when the run started
+        # holds no baseline (this run's rows are not earlier than
+        # eval_time), so it is not read — whatever other groups append
+        # meanwhile.
         baseline_days = int(rule.params.get("baseline_lookback_days", 90))
         prev = None
-        if s.store.exists("_dq_lineage", s.spark):
+        if s.lineage_existed:
             lineage = s.store.read(s.spark, "_dq_lineage", LINEAGE_SCHEMA).filter(
                 (F.col("rule_id") == RULE_DRIFT)
                 & (F.col("evaluated_at") < s.eval_ts)
@@ -503,7 +509,7 @@ class RuleSuite:
                     F.array(F.lit("NOT_ENOUGH_DATA"), F.coalesce(F.col("hist_json"), F.lit("{}"))),
                 ).alias("metrics"),
             )
-            return [(verdicts, None)]
+            return verdicts, None
 
         scored = psi_ks(prev, cur, by=["partition_id"], n_buckets=n_buckets)
         verdicts = (
@@ -529,11 +535,11 @@ class RuleSuite:
                 ).alias("metrics"),
             )
         )
-        return [(verdicts, None)]
+        return verdicts, None
 
     def _commit_verdicts(
         self, s: _Scope, rule: Rule, v: DataFrame, metrics: dict[str, str]
-    ) -> list[tuple[DataFrame, None]]:
+    ) -> tuple[DataFrame, None]:
         """Project a commit-history operator's verdict frame to lineage
         shape (``metrics`` maps metric names to its columns).
 
@@ -559,9 +565,9 @@ class RuleSuite:
                 F.create_map(F.lit("error_code"), F.lit("NOT_ENOUGH_DATA")),
             ).alias("metrics"),
         )
-        return [(verdicts, None)]
+        return verdicts, None
 
-    def _compile_completeness(self, s: _Scope, rules: list[Rule]) -> list[tuple[DataFrame, None]]:
+    def _compile_completeness(self, s: _Scope, rules: list[Rule]) -> tuple[DataFrame, None]:
         from anomaly_detection_spark.operators.completeness import completeness_verdicts
 
         (rule,) = rules
@@ -575,7 +581,7 @@ class RuleSuite:
         names = ("last_window_row_volume", "predicted_row_volume_lower_bound")
         return self._commit_verdicts(s, rule, v, {n: n for n in names})
 
-    def _compile_freshness(self, s: _Scope, rules: list[Rule]) -> list[tuple[DataFrame, None]]:
+    def _compile_freshness(self, s: _Scope, rules: list[Rule]) -> tuple[DataFrame, None]:
         from anomaly_detection_spark.operators.freshness import freshness_verdicts
 
         (rule,) = rules
@@ -597,7 +603,7 @@ class RuleSuite:
             },
         )
 
-    def _compile_event_freshness(self, s: _Scope, rules: list[Rule]) -> list[tuple[DataFrame, None]]:
+    def _compile_event_freshness(self, s: _Scope, rules: list[Rule]) -> tuple[DataFrame, None]:
         # M4/M5: event-latency freshness — the reference always runs the
         # commit AND event paths together (freshness_utils.py:661-752);
         # the suite mirrors that with a dedicated rule kind.
@@ -644,7 +650,8 @@ class RuleSuite:
         # Checkpoint state is read ONCE per run and reduced driver-side:
         # it is tiny (one row per partition × rule), and doing the
         # bookkeeping in Python avoids ~4 extra Spark jobs per rule.
-        if store.exists("_dq_lineage", spark):
+        lineage_existed = store.exists("_dq_lineage", spark)
+        if lineage_existed:
             # error rows (error_message set) are RETRYABLE — only real
             # verdicts checkpoint; guard-degraded Unknowns (e.g.
             # NOT_ENOUGH_DATA with no error_message) are durable verdicts
@@ -734,9 +741,13 @@ class RuleSuite:
                 com = com.filter(keep) if com is not None else None
                 ev = ev.filter(keep) if ev is not None else None
             spine = spark.createDataFrame([(p,) for p in pending], "partition_id int")
-            return _Scope(spark, spine, docs, com, ev, asset_catalog, store, eval_ts, cache)
+            return _Scope(
+                spark, spine, docs, com, ev, asset_catalog, store, eval_ts, cache, lineage_existed
+            )
 
         def write_outputs(verdicts: DataFrame, viol: DataFrame | None) -> None:
+            """One commit per rule group: its violations, then the
+            lineage rows that mark its pairs complete."""
             lineage_rows = verdicts.select(
                 eval_ts.alias("evaluated_at"),
                 F.lit(run_id).alias("run_id"),
@@ -749,56 +760,57 @@ class RuleSuite:
                 F.lit(None).cast(IMPACT_STRUCT).alias("downstream_impact"),
                 F.lit(None).cast("map<string,map<string,string>>").alias("additional_debug_info"),
             )
-            # materialize the heavy plans before the writes: violations
-            # feed both the write and the verdict counts, so one persist
-            # covers both (persisted FIRST, so the lineage plan reads the
-            # violations cache); verdict rows are tiny
-            persisted = [] if viol is None else [viol.persist()]
-            persisted.append(lineage_rows.persist())
+            if viol is None:
+                store.append("_dq_lineage", lineage_rows.repartition(1))
+                return
+            # violations feed both the write and the verdict counts: the
+            # group's one eager action materializes them, and the
+            # lineage rows then read the cache
+            viol = viol.persist()
             try:
-                lineage_rows.count()
-                if viol is not None:
-                    to_write = viol
-                    cap = self.max_violations_per_pair
-                    if cap is not None:
-                        # deterministic hash-threshold down-sampling per
-                        # (rule, partition): no window over a skewed key,
-                        # no hot reducer — a broadcast of per-pair counts
-                        # plus a row-local hash test
-                        counts = viol.groupBy("partition_id", "rule_id").agg(
-                            F.count(F.lit(1)).alias("_n")
-                        )
-                        to_write = viol.join(
-                            F.broadcast(counts), ["partition_id", "rule_id"]
-                        ).filter(
-                            (F.col("_n") <= cap)
-                            | (
-                                # hash includes the span payload: duplicate-
-                                # key violations share doc_id, and a doc_id-
-                                # only hash would keep all-or-none of a hot
-                                # key. NO run_id in the hash: the sample must
-                                # be a pure function of the data so identical
-                                # runs (e.g. at two cluster sizes) store
-                                # identical example sets — and retries stay
-                                # idempotent.
-                                F.pmod(
-                                    F.xxhash64("doc_id", "offending_spans"),
-                                    F.lit(1_000_000),
-                                )
-                                < F.lit(1_000_000.0) * F.lit(float(cap)) / F.col("_n")
-                            )
-                        ).drop("_n")
-                    # repartition before write: violations are a tiny
-                    # filtered set — the scan's task count would produce
-                    # hundreds of near-empty files
-                    store.append(
-                        "_dq_violations",
-                        to_write.withColumn("run_id", F.lit(run_id)).repartition(8),
+                to_write = viol
+                cap = self.max_violations_per_pair
+                # a pair can only exceed the cap if the group's total
+                # does; below it the cap's filter keeps every row, so
+                # the count-by-pair join is not planned at all
+                if cap is not None and viol.count() > cap:
+                    # deterministic hash-threshold down-sampling per
+                    # (rule, partition): no window over a skewed key,
+                    # no hot reducer — a broadcast of per-pair counts
+                    # plus a row-local hash test
+                    counts = viol.groupBy("partition_id", "rule_id").agg(
+                        F.count(F.lit(1)).alias("_n")
                     )
+                    to_write = viol.join(
+                        F.broadcast(counts), ["partition_id", "rule_id"]
+                    ).filter(
+                        (F.col("_n") <= cap)
+                        | (
+                            # hash includes the span payload: duplicate-
+                            # key violations share doc_id, and a doc_id-
+                            # only hash would keep all-or-none of a hot
+                            # key. NO run_id in the hash: the sample must
+                            # be a pure function of the data so identical
+                            # runs (e.g. at two cluster sizes) store
+                            # identical example sets — and retries stay
+                            # idempotent.
+                            F.pmod(
+                                F.xxhash64("doc_id", "offending_spans"),
+                                F.lit(1_000_000),
+                            )
+                            < F.lit(1_000_000.0) * F.lit(float(cap)) / F.col("_n")
+                        )
+                    ).drop("_n")
+                # repartition before write: violations are a tiny
+                # filtered set — the scan's task count would produce
+                # hundreds of near-empty files
+                store.append(
+                    "_dq_violations",
+                    to_write.withColumn("run_id", F.lit(run_id)).repartition(8),
+                )
                 store.append("_dq_lineage", lineage_rows.repartition(1))
             finally:
-                for df in persisted:
-                    df.unpersist()
+                viol.unpersist()
 
         def degrade(group: list[Rule], pending: list, e: Exception) -> None:
             """M16: write Unknown verdicts with an error code + clipped
@@ -830,11 +842,9 @@ class RuleSuite:
             and the next run retries them. Config errors (ValueError)
             and environment errors (failed imports) raise instead."""
             try:
-                outs = getattr(self, RULE_KINDS[group[0].kind].compiler)(
-                    scope(group, pending), group
+                write_outputs(
+                    *getattr(self, RULE_KINDS[group[0].kind].compiler)(scope(group, pending), group)
                 )
-                for verdicts, viol in outs:
-                    write_outputs(verdicts, viol)
             except ValueError:
                 raise
             except Exception as e:  # noqa: BLE001 — by design
@@ -864,6 +874,10 @@ class RuleSuite:
             for df in cache:
                 df.unpersist()
 
+        # The tail is computed once: the latest per-rule rows and the
+        # overall fold are each held under one cache label (a later run
+        # releases them; released, they recompute from the same store
+        # read), and the returned verdicts and violations read them.
         lineage_all = store.read(spark, "_dq_lineage", LINEAGE_SCHEMA).filter(
             (F.col("evaluated_at") == eval_ts) & (F.col("config_hash") == cfg)
         )
@@ -893,8 +907,9 @@ class RuleSuite:
         # random run_id tiebreak would pick it ~50% of the time. The
         # store append still happens only when new work ran (or nothing
         # was stored yet), keeping the lineage append rate bounded.
-        lineage_rules = lineage_all.filter(F.col("rule_id") != RULE_OVERALL)
-        latest_rules = latest_of(lineage_rules)
+        latest_rules = cached(
+            "suite_latest_rules", latest_of(lineage_all.filter(F.col("rule_id") != RULE_OVERALL))
+        )
         folded = V.fold_group_status(latest_rules, ["partition_id"])
         by_key = lambda l, r: F.when(l["key"] < r["key"], -1).when(l["key"] > r["key"], 1).otherwise(0)  # noqa: E731
         debug = latest_rules.groupBy("partition_id").agg(
@@ -933,17 +948,21 @@ class RuleSuite:
             "downstream_impact",
             "additional_debug_info",
         )
+        overall_rows = cached("suite_overall_rows", overall_rows)
         # short-circuit: when work ran this run we append regardless, so
         # only the nothing-pending resume path pays the stored-overall
         # existence probe (an eager isEmpty job)
         if groups or lineage_all.filter(F.col("rule_id") == RULE_OVERALL).isEmpty():
             store.append("_dq_lineage", overall_rows.repartition(1))
 
-        latest = latest_of(lineage_rules.unionByName(overall_rows))
-        # impact desc participates in the display sort (reference
+        # overall rows are one per partition and latest_rules holds
+        # none, so their union is already latest-per-(partition, rule).
+        # Impact desc participates in the display sort (reference
         # common_utils.py:35-91); only overall rows carry impact — the
         # null-to-lowest rule keeps per-rule rows stably ordered
-        verdicts_sorted = V.sort_verdicts(latest, impact_col="downstream_impact.impact_level")
+        verdicts_sorted = V.sort_verdicts(
+            latest_rules.unionByName(overall_rows), impact_col="downstream_impact.impact_level"
+        )
         violations = store.read(spark, "_dq_violations", VIOLATIONS_SCHEMA)
         # authoritative violations: only those written by the run whose
         # verdict is the latest for their (rule, partition) — never an

@@ -25,7 +25,7 @@ class IcebergCatalog:
 
     Appends are atomic Iceberg snapshot commits, which upgrades the
     engine's crash-consistency note: violations + lineage for one rule
-    can land in two commits whose visibility the lineage row still
+    group can land in two commits whose visibility the lineage row still
     gates, exactly as in the local implementation.
     """
 

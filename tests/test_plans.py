@@ -109,6 +109,37 @@ def test_no_forced_broadcast_of_data_dependent_sets(spark, docs_parquet):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
+def test_refine_topk_query_broadcast_is_count_guarded(spark):
+    """refine_topk's query vectors are broadcast only when the query
+    set fits ``max_broadcast_candidates``: at the bound the query_id
+    join is a broadcast-hash join, one row over it a plain join (the
+    candidate-pair broadcast on neighbor_id stays either way)."""
+    from anomaly_detection_spark.caching import release_caches
+    from anomaly_detection_spark.operators.similarity import refine_topk
+
+    emb = spark.createDataFrame(
+        [(i, [float(i), 1.0]) for i in range(8)], "vec_id bigint, embedding array<float>"
+    )
+    cands = spark.createDataFrame([(0, 1), (1, 2)], "query_id bigint, neighbor_id bigint")
+
+    def plan(bound):
+        df = refine_topk(cands, emb, emb, k=1, max_broadcast_candidates=bound)
+        return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        at_bound, over = plan(8), plan(7)
+        assert "BroadcastHashJoin [neighbor_id" in at_bound
+        assert "BroadcastHashJoin [query_id" in at_bound
+        assert "BroadcastHashJoin [neighbor_id" in over
+        assert "BroadcastHashJoin [query_id" not in over
+        assert "SortMergeJoin [query_id" in over
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        release_caches()
+
+
 def test_span_violations_stays_in_jvm(spark, docs_parquet):
     plan = formatted_plan(span_violations(docs_parquet))
     assert "Python" not in plan  # no python UDF in the default hot path
