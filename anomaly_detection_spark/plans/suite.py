@@ -25,6 +25,7 @@ import hashlib
 import json
 import uuid
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any
 
 import pyspark.sql.functions as F
@@ -396,10 +397,7 @@ class RuleSuite:
             verdicts.append(self._span_verdicts(sv, s.spine))
         if "uniqueness" in by_kind:
             verdicts.append(self._uniqueness_verdicts(per_pk, dk, key, s.spine))
-        out = verdicts[0]
-        for v in verdicts[1:]:
-            out = out.unionByName(v)
-        return out, viol_all
+        return reduce(DataFrame.unionByName, verdicts), viol_all
 
     def _compile_profile(self, s: _Scope, rules: list[Rule]) -> tuple[DataFrame, None]:
         (rule,) = rules
@@ -763,9 +761,9 @@ class RuleSuite:
             if viol is None:
                 store.append("_dq_lineage", lineage_rows.repartition(1))
                 return
-            # violations feed both the write and the verdict counts: the
-            # group's one eager action materializes them, and the
-            # lineage rows then read the cache
+            # violations feed both the write and the verdict counts:
+            # persisted, they are computed once (by the cap count or the
+            # violations append) and the lineage rows read the cache
             viol = viol.persist()
             try:
                 to_write = viol

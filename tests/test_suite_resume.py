@@ -234,11 +234,10 @@ def test_violation_cap_below_every_pair_stores_every_row(spark, inputs, tmp_path
     per_pair = {}
     for _doc, rid, part, _spans in want:
         per_pair[(rid, part)] = per_pair.get((rid, part), 0) + 1
-    # the doc-scan group (spans + uniqueness) is the larger of the two
-    # groups with violations; a cap at its total covers both
-    docscan_total = sum(n for (rid, _), n in per_pair.items() if rid != "ri.media_ref")
+    ri_total = sum(n for (rid, _), n in per_pair.items() if rid == "ri.media_ref")
+    docscan_total = sum(per_pair.values()) - ri_total
     assert max(per_pair.values()) < docscan_total
-    assert stored(docscan_total, "total_at_cap") == want
+    assert stored(max(ri_total, docscan_total), "totals_at_cap") == want
     assert stored(max(per_pair.values()), "pairs_at_cap") == want
 
 
@@ -296,7 +295,6 @@ def test_crash_between_a_groups_two_appends_reruns_the_group(spark, inputs, tmp_
 
     assert verdicts(resumed) == verdicts(fresh)
     assert violation_keys(resumed) == violation_keys(fresh)
-    assert {x["run_id"] for x in resumed.violations.collect()} <= {resumed.run_id, crashed.run_id}
     assert not resumed.violations.filter(
         F.col("rule_id").isin(list(docscan_ids)) & (F.col("run_id") != resumed.run_id)
     ).count()
@@ -326,8 +324,7 @@ def test_jobs_per_suite_run_are_pinned(spark, inputs, tmp_path):
         ),
     )
     _, n_result = jobs("pin-suite-result", lambda: (res.verdicts.collect(), res.violations.collect()))
-    # measured on this fixture: 69 and 6 (102 and 13 when each rule
-    # committed on its own and the result re-derived the tail)
+    # measured on this fixture
     assert n_run <= 69, n_run
     assert n_result <= 6, n_result
 
