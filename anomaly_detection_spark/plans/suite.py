@@ -964,10 +964,13 @@ class RuleSuite:
         violations = store.read(spark, "_dq_violations", VIOLATIONS_SCHEMA)
         # authoritative violations: only those written by the run whose
         # verdict is the latest for their (rule, partition) — never an
-        # older eval_time's or config's, nor a crashed attempt's —
-        # deduped per doc/rule
+        # older eval_time's or config's, nor a crashed attempt's, nor a
+        # group that failed after its violations append (its latest row
+        # is an error row of the same run_id) — deduped per doc/rule
         violations = violations.join(
-            latest_rules.select("partition_id", "rule_id", "run_id"),
+            latest_rules.filter(F.col("error_message").isNull()).select(
+                "partition_id", "rule_id", "run_id"
+            ),
             on=["partition_id", "rule_id", "run_id"],
             how="left_semi",
         ).dropDuplicates(["doc_id", "rule_id", "partition_id"])

@@ -484,6 +484,39 @@ def test_docscan_failure_degrades_every_rule_id(spark, inputs, tmp_path, monkeyp
     assert r.violations.count() == 0
 
 
+class _FailsDocscanLineage(LocalParquetCatalog):
+    """A store whose doc-scan group lineage append fails once, after
+    that group's violations landed: the group degrades under the same
+    run_id as its stored violations."""
+
+    failed = False
+
+    def append(self, table, df):
+        if table == "_dq_lineage" and not self.failed:
+            ids = {r.rule_id for r in df.select("rule_id").distinct().collect()}
+            if "unique.doc_id" in ids:
+                self.failed = True
+                raise RuntimeError("model failed to converge")
+        super().append(table, df)
+
+
+def test_group_failing_after_its_violations_append_returns_none(spark, inputs, tmp_path):
+    """A group that fails after its violations append degrades to
+    Unknown; its violations, stored under the run's own run_id, are not
+    returned next to the Unknown verdicts."""
+    docs, cat, commits, _events = inputs
+    suite = RuleSuite([Rule("spans"), Rule("uniqueness"), Rule("profile")])
+    store = _FailsDocscanLineage(str(tmp_path / "s"))
+    r = suite.run(spark, docs, cat, commits, store=store)
+    assert store.failed
+    orphans = store.read(spark, "_dq_violations").filter(F.col("run_id") == r.run_id)
+    assert orphans.count() > 0
+    docscan_ids = {"spans.monotone_offset", "spans.valid_kind", "spans.payload_presence", "unique.doc_id"}
+    rows = [v for v in r.verdicts.collect() if v["rule_id"] in docscan_ids]
+    assert len(rows) == 16 and all(v["status"] == "Unknown" for v in rows)
+    assert r.violations.count() == 0
+
+
 def test_stale_overall_row_never_wins_resume(spark, inputs, tmp_path):
     """A crashed run can leave a stale 'overall' row (folded over fewer
     rules, e.g. Healthy) that ties the real one on evaluated_at — the
