@@ -169,9 +169,9 @@ class RuleSuite:
         # driver-side overlap of independent rule jobs; results are
         # identical at any value (appends are concurrency-safe). Default
         # submits EVERY independent rule concurrently and lets the Spark
-        # scheduler arbitrate — measured ~7% faster warm suite than a
-        # 4-slot pool at 1M docs/local[32] (commit rules no longer queue
-        # behind the doc scans), identical results.
+        # scheduler arbitrate (commit rules do not queue behind the doc
+        # scan) — on 4 vCPUs a warm 200k-doc suite took 27.9 s at 8
+        # against 34.8 s serial, identical results.
         self.parallel_rules = parallel_rules
         # cap on WRITTEN violation rows per (rule, partition): at 10^12
         # docs a single pathological key (the skew fixture) would emit

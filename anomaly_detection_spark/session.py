@@ -73,6 +73,14 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(32 * 1024 * 1024)),
         )
         .config("spark.sql.files.openCostInBytes", str(1024 * 1024))
+        # Generated-class cache sized to the engine's working set: one
+        # default_suite() run compiles ~240-250 distinct whole-stage-codegen
+        # classes and an operator_queries pass ~290. Spark's default of 100
+        # evicts them mid-run, so a repeated run recompiles (and re-JITs)
+        # them all: 239 compiles on a repeated tier-1 suite run at 100, 4
+        # at 2000. Static conf: it applies only when this builds the JVM's
+        # first session.
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -10,8 +10,10 @@ local[8] (N) and local[32] (4N) in fresh JVMs, and report:
    10^12-document scale the engine targets. The marginal regime is the
    faithful stand-in for at-scale behavior.
 
-Each JVM warms up with one small run first (JIT/codegen warmup is
-excluded, as is standard), then measures T_small and T_big.
+Each JVM warms up with one small run first, so codegen and JIT warm-up
+are excluded from T_small and T_big: get_spark's codegen class cache
+(2000 entries) keeps the warm-up's ~250 generated classes for the timed
+runs, where Spark's default of 100 would evict them mid-run.
 
 Usage: python scripts/scaling_bench.py [n_big] [n_small]
 """
